@@ -26,15 +26,24 @@ object Session {
     * identical on tmpfs). Measured min-of-3 over the 19-query
     * replay/streaming tier at sf0.1: 72.7 → 60.8 s. Override with
     * SPARK_GRAFT_SCRATCH_DIR; the fallback is the JVM tmpdir — the
-    * pre-round-16 behavior, byte for byte.
+    * pre-round-16 behavior, byte for byte. The choice and its reason are
+    * logged once, when the first session is built.
     */
-  private[graft] lazy val scratchRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_SCRATCH_DIR", {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= (32L << 30))
-        shm.getPath + "/graft_scratch"
-      else System.getProperty("java.io.tmpdir")
-    })
+  private[graft] lazy val scratchRoot: String = {
+    val (root, why) = sys.env.get("SPARK_GRAFT_SCRATCH_DIR") match {
+      case Some(dir) => (dir, "SPARK_GRAFT_SCRATCH_DIR override")
+      case None =>
+        val shm = new java.io.File("/dev/shm")
+        val free = if (shm.isDirectory && shm.canWrite) shm.getUsableSpace else -1L
+        if (free >= (32L << 30))
+          (shm.getPath + "/graft_scratch", s"/dev/shm has $free free bytes >= 32 GiB")
+        else (System.getProperty("java.io.tmpdir"),
+          if (free < 0) "/dev/shm is not a writable directory; JVM tmpdir fallback"
+          else s"/dev/shm has $free free bytes < 32 GiB; JVM tmpdir fallback")
+    }
+    System.err.println(s"[session] scratch root: $root ($why)")
+    root
+  }
 
   def build(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",

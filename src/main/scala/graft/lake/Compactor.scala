@@ -1,118 +1,27 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Small-file compaction for the partitioned candle lake — the
-  * maintenance operator every long-running ingest (SURVEY.md §2.2 K1/K2)
-  * eventually needs: each incremental `MergeWriter.merge` writes its
-  * shuffle-parallelism's worth of files into the touched partitions, and
-  * a year of 15-minute merges leaves thousands of kilobyte files whose
-  * open/footer overhead dominates scan time at 100 TB.
+/** Layout maintenance for manifest lakes — the rewrites every
+  * long-running ingest (SURVEY.md §2.2 K1/K2) eventually needs, each
+  * published as ONE [[ManifestLake.replacePartitions]] commit:
   *
-  * Shape: ONE driver-side metadata listing (the same FileSystem walk any
-  * table format's manifest maintenance does) picks partitions whose file
-  * count exceeds the threshold; only those partitions are read —
-  * broadcast semi join on the partition tuple, so partition pruning
-  * applies — shuffled once on the partition key, and rewritten with
-  * dynamic partition overwrite. Cost scales with the bytes of the
-  * fragmented partitions, never with lake size. Untouched partitions are
-  * never listed by the rewrite (dynamic overwrite replaces only
-  * partitions present in the incoming relation).
+  *  - [[compactManifest]] collapses fragmented committed partitions into
+  *    single files. A keyed merge writes one file per touched partition,
+  *    so fragments come from oversized merges (`maxRecordsPerFile`
+  *    rolls), foreign writers and in-place imported lock-path lakes
+  *    ([[ManifestLake.importLockLake]]), whose root partitions it always
+  *    relocates;
+  *  - [[clusterManifest]] re-lays every committed partition sorted by a
+  *    sort expression — a plain column clusters one dimension, a Morton
+  *    key (`z_interleave_n(...)`) a multi-dimensional box — so footer
+  *    min/max statistics prune files.
   *
-  * One file per partition is the target (candle partitions are bounded:
-  * a (symbol, interval, exchange, date) holds ≤ 1 day of candles);
-  * `maxRecordsPerFile` caps pathological partitions so a single task
-  * still emits bounded files.
+  * A plain partitioned Parquet lake is maintained by importing it
+  * first; the lock path has no in-place rewrite verbs.
   */
 object Compactor {
-  private val Keys = Seq("symbol", "interval", "data_type", "exchange", "date")
-
-  /** Partition-level fragmentation report: one row per partition
-    * directory with file count and total bytes. Pure metadata — no data
-    * read. Listing is driver-side but proportional to file count, the
-    * same order as the planner's own listing for any scan of the lake.
-    */
-  def fragmentation(spark: SparkSession, path: String): Seq[(Map[String, String], Int, Long)] = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return Seq.empty
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val it = fs.listFiles(hPath, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toString.stripPrefix(fs.makeQualified(hPath).toString)
-      if (f.getPath.getName.endsWith(".parquet")) files += ((rel, f.getLen))
-    }
-    files
-      .groupBy { case (rel, _) =>
-        rel.split("/").filter(_.contains("=")).map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k -> v
-        }.toMap
-      }
-      .map { case (part, fs0) => (part, fs0.size, fs0.map(_._2).sum) }
-      .toSeq
-  }
-
-  /** Rewrite every partition holding more than `maxFiles` parquet files
-    * into (up to `maxRecordsPerFile`-bounded) single files. Returns a
-    * summary relation (partition cols, files_before) of what was
-    * compacted; no-op (empty result) when nothing is fragmented.
-    */
-  def compact(spark: SparkSession, path: String, maxFiles: Int = 1,
-              maxRecordsPerFile: Long = 5000000L): DataFrame = {
-    import spark.implicits._
-    // A manifest lake's data dirs are immutable txns resolved through
-    // the manifest — walking and overwriting them in place would both
-    // read superseded files and corrupt commit visibility. Route to the
-    // manifest-native rewrite instead (round-11 verdict item 2).
-    require(!ManifestLake.isManifestLake(spark, path),
-      s"Compactor: $path is a manifest lake — in-place dynamic overwrite " +
-        "would bypass the manifest commit protocol; use compactManifest")
-    val frag = fragmentation(spark, path)
-      .filter { case (part, n, _) => n > maxFiles && part.keySet == Keys.toSet }
-    val summary = frag
-      .map { case (part, n, bytes) =>
-        (part("symbol"), part("interval"), part("data_type"), part("exchange"),
-          part("date"), n, bytes)
-      }
-      .toDF("symbol", "interval", "data_type", "exchange", "date",
-        "files_before", "bytes")
-    if (frag.isEmpty) return summary
-    // Compaction is precisely the maintenance job that runs concurrently
-    // with live ingest; an unlocked rewrite racing a merge would lose the
-    // merge's rows (read pre-merge state, overwrite post-merge files).
-    // Same serialization discipline as the merge itself (round-11
-    // verdict item 1).
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    MergeWriter.withWriterLock(fs, path) {
-      val touched = summary.select(Keys.map(col): _*)
-      // read through the tracked lake schema (MergeWriter.readLake): with
-      // additive evolution, footer-sampled inference could pick a
-      // pre-evolution file and silently DROP the new column from the
-      // partitions being REWRITTEN — compaction must never change data
-      val affected = MergeWriter.readLake(spark, path)
-        .join(broadcast(touched), Keys, "left_semi")
-        // cut lineage from the path being overwritten (same constraint as
-        // MergeWriter.merge); affected partitions are the fragmented ones
-        // only, so checkpoint storage is bounded by what gets rewritten
-        .localCheckpoint()
-      affected
-        // one shuffle on the partition tuple → one task per partition →
-        // one output file (maxRecordsPerFile splits oversized ones)
-        .repartition(Keys.map(col): _*)
-        .write
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", maxRecordsPerFile.toString)
-        .partitionBy(Keys: _*)
-        .parquet(path)
-    }
-    summary.orderBy(Keys.map(col): _*)
-  }
-
   /** Manifest-lake compaction: collapse fragmented COMMITTED partitions
     * into single-file rewrites published through one
     * [[ManifestLake.replacePartitions]] commit — compaction as a
@@ -181,8 +90,8 @@ object Compactor {
       .localCheckpoint()
       // one task per partition → one output file per partition
       .repartition(keys.map(col): _*)
-    // maxRecordsPerFile caps pathological partitions, as in compact() —
-    // a per-write option, not a session conf mutation
+    // maxRecordsPerFile caps pathological partitions — a per-write
+    // option, not a session conf mutation
     ManifestLake.replacePartitions(spark, path, fragged.map(_._1).toSet,
       affected, keys, Map("maxRecordsPerFile" -> maxRecordsPerFile.toString),
       expectedVersion = baseVersion)
@@ -293,70 +202,5 @@ object Compactor {
     ManifestLake.replacePartitions(spark, path, entries.keySet, affected,
       keys, Map("maxRecordsPerFile" -> maxRecordsPerFile.toString),
       expectedVersion = baseVersion)
-  }
-
-  /** Z-order clustering rewrite: re-lay an (unpartitioned) dataset's
-    * files along the Morton curve of two dimension columns
-    * ([[graft.functions.ZInterleave]]), so every output file's min/max
-    * footer statistics are tight in BOTH dimensions and a predicate on
-    * either prunes files — the layout move behind Delta/Iceberg
-    * Z-ORDER BY, applied here with plain `repartitionByRange` +
-    * in-partition sort (range partitioning samples the z keys, so file
-    * row counts stay balanced regardless of dimension skew).
-    *
-    * `dimX`/`dimY` must be SQL expressions yielding non-negative
-    * BIGINTs ≤ 65535 (normalize first — q171 derives a relative hour
-    * bucket). Cost: one full sort-shuffle of the dataset — a
-    * maintenance rewrite, run at compaction cadence, never per query;
-    * at 100 TB it amortizes exactly like compaction (rewrite once,
-    * every multi-dimensional scan after skips).
-    */
-  def zOrderRewrite(spark: SparkSession, path: String, dimX: String,
-                    dimY: String, nFiles: Int): Unit =
-    clusterRewrite(spark, path, nFiles,
-      s"z_interleave16(cast(($dimX) as bigint), cast(($dimY) as bigint))")
-
-  /** N-dimensional Z-order rewrite ([[graft.functions.ZInterleaveN]]):
-    * a (user, hour, symbol) layout needs 3 dims — each dim gets
-    * `63/k` interleave bits (k=3 → 21 bits/dim; normalize into that
-    * range first), trading per-dimension tightness for pruning coverage
-    * on every listed dimension. Same lock/guard/schema discipline as
-    * the 2-dim rewrite.
-    */
-  def zOrderRewriteN(spark: SparkSession, path: String, dims: Seq[String],
-                     nFiles: Int): Unit = {
-    require(dims.size >= 2, "zOrderRewriteN needs at least 2 dimensions")
-    clusterRewrite(spark, path, nFiles,
-      dims.map(d => s"cast(($d) as bigint)")
-        .mkString("z_interleave_n(", ", ", ")"))
-  }
-
-  private def clusterRewrite(spark: SparkSession, path: String, nFiles: Int,
-                             zSql: String): Unit = {
-    graft.plans.GraftExtensions.register(spark)
-    require(!ManifestLake.isManifestLake(spark, path),
-      s"Compactor: $path is a manifest lake — zOrderRewrite's in-place " +
-        "overwrite would bypass the manifest commit protocol")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same writer-serialization as compact(): a clustering rewrite racing
-    // a merge would overwrite the merge's rows with pre-merge state
-    MergeWriter.withWriterLock(fs, path) {
-      // read through the tracked schema when a sidecar exists — rewriting
-      // a schema-evolved dataset from footer-sampled inference could drop
-      // the evolved column from the ENTIRE rewritten output
-      val base = MergeWriter.storedSchema(spark, path) match {
-        case Some(sc) => spark.read.schema(sc).parquet(path)
-        case None     => spark.read.parquet(path)
-      }
-      val clustered = base
-        .withColumn("__z", expr(zSql))
-        // lineage cut: the write below overwrites the path being read
-        .localCheckpoint()
-        .repartitionByRange(nFiles, col("__z"))
-        .sortWithinPartitions(col("__z"))
-        .drop("__z")
-      clustered.write.mode(SaveMode.Overwrite).parquet(path)
-    }
   }
 }

@@ -1,0 +1,124 @@
+package graft.lake
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.operators.KeepLast
+
+/** The keyed-merge body both lake commit protocols share — the
+  * reference's `save_to_parquet` upsert (crypto_collector.py:523–558)
+  * minus its commit: additive schema evolution → touched partition keys
+  * → affected rows ∪ batch → explicit-order dedup → clustering by
+  * partition key. The protocols differ only in how they read the
+  * touched partitions' existing rows and how they publish the result:
+  *
+  *  - lock path ([[MergeWriter.mergeKeyed]]): a static partition
+  *    predicate over the live directories plus a lineage cut, then a
+  *    dynamic-partition overwrite under the single-writer lock;
+  *  - manifest path ([[ManifestLake.mergeKeyed]]): the committed
+  *    manifest entries of the touched partitions, then a private txn
+  *    directory plus the manifest CAS.
+  */
+private[lake] object KeyedMerge {
+
+  /** One merge up to its commit: the evolved table `schema`, the
+    * `touched` partition-key values (one Seq per distinct combination,
+    * in `keys` order; empty when collection was skipped), the `deduped`
+    * relation (the merge's result) and `toWrite`, the same rows
+    * clustered by partition key.
+    */
+  final case class Prepared(schema: StructType, touched: Seq[Seq[String]],
+                            deduped: DataFrame, toWrite: DataFrame)
+
+  /** Contract: `keys` columns in `tagged` are non-null STRINGs (callers
+    * derive them with date_format/lit) and `tagged` already carries the
+    * ordering column(s). `stored` is the lake's tracked schema, if any.
+    * `collectTouched = false` skips the touched-key pass (a lake with
+    * nothing to read yet); otherwise `readAffected(schema, touched)`
+    * returns the touched partitions' existing rows, or None for none.
+    */
+  def apply(spark: SparkSession, tagged: DataFrame, keys: Seq[String],
+            dedupKeys: Seq[Column], order: Seq[Column], clusteredDedup: Boolean,
+            stored: Option[StructType], collectTouched: Boolean)(
+      readAffected: (StructType, Seq[Seq[String]]) => Option[DataFrame]): Prepared = {
+    // Additive schema evolution, validated before any job runs: a type
+    // change is a loud reject, a new column evolves the tracked schema,
+    // and existing data is read THROUGH the evolved schema so partitions
+    // written before the new column still surface it (as null). The
+    // first merge seeds the schema from the batch.
+    val schema = stored match {
+      case Some(s) => evolveSchema(s, tagged.schema)
+      case None    => StructType(tagged.schema.fields.map(_.copy(nullable = true)))
+    }
+    // The touched key set is bounded by the batch's distinct partition-key
+    // combinations, so it collects to the driver. Null guard (round-10
+    // advice): a null key would write a __HIVE_DEFAULT_PARTITION__
+    // directory and never match its own partition on the next merge's
+    // read, silently dropping that partition's rows.
+    val touched =
+      if (!collectTouched) Seq.empty
+      else tagged.select(keys.map(col): _*).distinct().collect().toSeq.map { r =>
+        keys.indices.map { i =>
+          if (r.isNullAt(i)) throw new IllegalArgumentException(
+            s"keyed merge: batch contains a NULL value for partition key " +
+              s"'${keys(i)}' — partition keys must be non-null strings " +
+              "(derive them with date_format/lit before merging)")
+          r.getString(i)
+        }
+      }
+    // allowMissingColumns both ways: the batch may ADD a column (existing
+    // rows get null) or a caller may still send the old shape after the
+    // lake evolved (batch rows get null). Dedup then applies whole-row
+    // keep-last/keep-first per key — a winning old-shape row carries null
+    // in the new column, the correct "that writer never knew the field".
+    val combined =
+      if (touched.isEmpty) tagged
+      else readAffected(schema, touched) match {
+        case Some(a) => a.unionByName(tagged, allowMissingColumns = true)
+        case None    => tagged
+      }
+    // Write parallelism = touched-directory count when known (each
+    // directory gets one file; extra tasks would launch empty), session-
+    // capped — never a constant. Explicit (round-16): without it AQE
+    // coalesces the batch-sized exchange to ONE partition and a single
+    // task writes every touched directory's file serially.
+    val par = spark.sparkContext.defaultParallelism
+    val nWrite = if (touched.nonEmpty) math.min(par, touched.size) else par
+    // clusteredDedup (round-16): when the caller guarantees the partition
+    // key is constant within each dedup-key group (KeepLast.dedupClustered's
+    // contract), the dedup window partitions by the WRITE key and the
+    // separate clustering repartition is unnecessary — one exchange of
+    // the merged relation instead of two. Otherwise cluster rows by
+    // partition key before the write: without it every post-dedup task
+    // can emit a file into every touched directory (up to tasks × dirs
+    // small files per merge, each a footer every later read pays).
+    val deduped =
+      if (clusteredDedup)
+        KeepLast.dedupClustered(combined, keys.map(col), dedupKeys, order, nWrite)
+      else KeepLast.dedup(combined, dedupKeys, order)
+    val toWrite =
+      if (clusteredDedup) deduped else deduped.repartition(nWrite, keys.map(col): _*)
+    Prepared(schema, touched, deduped, toWrite)
+  }
+
+  /** Validate `batch` against the lake's tracked schema and return the
+    * evolved table schema: tracked columns first (their order is the
+    * table's), genuinely new batch columns appended, everything
+    * nullable (an added column is null for every pre-existing row by
+    * construction). A column whose TYPE differs from the tracked one is
+    * rejected loudly — silent coercion is how a lake loses data.
+    */
+  private def evolveSchema(stored: StructType, batch: StructType): StructType = {
+    val conflicts = batch.fields.flatMap { f =>
+      stored.fields.find(_.name == f.name).filter(_.dataType != f.dataType)
+        .map(s => s"'${f.name}': lake has ${s.dataType.simpleString}, " +
+          s"batch has ${f.dataType.simpleString}")
+    }
+    if (conflicts.nonEmpty) throw new IllegalStateException(
+      "keyed merge: batch changes the TYPE of existing lake column(s) — " +
+        "additive evolution only (new nullable columns); rewrite the lake " +
+        "explicitly for type migrations. Conflicts: " + conflicts.mkString("; "))
+    val newCols = batch.fields.filterNot(f => stored.fieldNames.contains(f.name))
+    StructType((stored.fields ++ newCols).map(_.copy(nullable = true)))
+  }
+}

@@ -3,7 +3,6 @@ package graft.lake
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
-import graft.operators.KeepLast
 
 /** Manifest-pointer commit protocol for the parquet lake — the
   * object-store-safe alternative to [[MergeWriter]]'s advisory writer
@@ -77,8 +76,8 @@ import graft.operators.KeepLast
   * batch finds its tag (direct headers or the checkpoint ledger) and
   * becomes a NO-OP commit instead of a duplicate version.
   *
-  * Schema evolution matches the lock path's contract
-  * ([[MergeWriter.evolveSchema]]): new nullable columns are accepted
+  * Schema evolution matches the lock path's contract (both run
+  * [[KeyedMerge]]'s body): new nullable columns are accepted
   * and tracked in the same `_graft_schema.json` sidecar; a TYPE change
   * is rejected loudly BEFORE any data is written. Mixed-version reads
   * align by name (`unionByName(allowMissingColumns)`).
@@ -456,9 +455,8 @@ object ManifestLake {
   }
 
   // Partition values must round-trip through directory names without
-  // escaping — the same plain-string contract the lock path's
-  // OR-of-equalities filter already imposes (symbols, intervals,
-  // exchanges, yyyyMMdd dates, source tags all satisfy it).
+  // escaping (symbols, intervals, exchanges, yyyyMMdd dates and source
+  // tags all satisfy it).
   private val PlainValue = "^[0-9A-Za-z._+-]+$".r
 
   private def relPath(keys: Seq[String], values: Seq[String]): String =
@@ -717,9 +715,10 @@ object ManifestLake {
   private def newTxnDirName(v: Long): String =
     s"txn-${v + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  /** Keyed merge with manifest commit — same semantics as the lock
-    * path's mergeKeyed (affected-partition read → union → explicit-order
-    * dedup → replace touched partitions), different durability story:
+  /** Keyed merge with manifest commit — [[KeyedMerge]]'s body, shared
+    * with the lock path's mergeKeyed (affected-partition read → union →
+    * explicit-order dedup → replace touched partitions), with a
+    * different durability story:
     * the replace is a new immutable txn directory plus one atomic
     * manifest publish, so a torn merge is INVISIBLE to readers and a
     * concurrent writer loses the commit race loudly. `commitTag` makes
@@ -766,43 +765,15 @@ object ManifestLake {
             "tighten redelivery lag if this recurs.")
       }
     }
-    // additive-only schema evolution, validated BEFORE any data write:
-    // same contract as the lock path — a type change is a loud reject, a
-    // new column evolves the tracked schema. The previous schema comes
-    // from the manifest HEADERS when present (commit-CAS-authoritative;
-    // a concurrent writer's evolution is visible the moment its commit
-    // is), with the sidecar as the legacy/import fallback.
+    // The previous schema comes from the manifest HEADERS when present
+    // (commit-CAS-authoritative; a concurrent writer's evolution is
+    // visible the moment its commit is), with the sidecar as the
+    // legacy/import fallback.
     val prevSchema = hs.schema
       .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
       .orElse(MergeWriter.readStoredSchema(fs, path))
-    val lakeSchema = prevSchema match {
-      case Some(stored) => MergeWriter.evolveSchema(stored, tagged.schema)
-      case None => org.apache.spark.sql.types.StructType(
-        tagged.schema.fields.map(_.copy(nullable = true)))
-    }
-    // the evolved schema rides THIS commit's headers (atomic with the
-    // CAS — round-14 advice: a sidecar publish decoupled from the commit
-    // can lose a column to a content race); emitted only when it differs
-    // from the previous tracked schema, so header bytes ∝ change
-    val schemaHeader =
-      if (!prevSchema.map(_.json).contains(lakeSchema.json))
-        Seq("schema" -> enc(lakeSchema.json))
-      else Nil
     val manifest = readManifest(fs, path, v)
-    val touched = tagged.select(keys.map(col): _*).distinct().collect().map { r =>
-      val values = keys.indices.map { i =>
-        if (r.isNullAt(i)) throw new IllegalArgumentException(
-          s"ManifestLake: NULL value for partition key '${keys(i)}' — " +
-            "partition keys must be non-null plain strings")
-        val s = r.getString(i)
-        if (PlainValue.findFirstIn(s).isEmpty) throw new IllegalArgumentException(
-          s"ManifestLake: partition value '$s' for key '${keys(i)}' needs " +
-            "path escaping — only [0-9A-Za-z._+-] values are supported")
-        s
-      }
-      relPath(keys, values)
-    }.toSet
     // No localCheckpoint on the affected read (round-15): unlike the
     // lock path (which must cut lineage because dynamic overwrite
     // refuses to write a path its own plan reads), this merge writes a
@@ -810,38 +781,28 @@ object ManifestLake {
     // partitions straight from their (immutable, still-referenced)
     // parquet files, so materializing them first is one extra job and
     // one extra pass of block writes per merge, bought for nothing.
-    val affected =
-      readEntriesGrouped(spark, path, manifest.view.filterKeys(touched).toMap)
-    val combined = affected match {
-      case Some(a) => a.unionByName(tagged, allowMissingColumns = true)
-      case None    => tagged
+    val m = KeyedMerge(spark, tagged, keys, dedupKeys, order, clusteredDedup,
+        prevSchema, collectTouched = true) { (_, touched) =>
+      touched.foreach(vs => keys.zip(vs).foreach { case (k, s) =>
+        if (PlainValue.findFirstIn(s).isEmpty) throw new IllegalArgumentException(
+          s"ManifestLake: partition value '$s' for key '$k' needs " +
+            "path escaping — only [0-9A-Za-z._+-] values are supported")
+      })
+      val rels = touched.map(relPath(keys, _)).toSet
+      readEntriesGrouped(spark, path, manifest.view.filterKeys(rels).toMap)
     }
-    // clusteredDedup (round-16, guide §2.4): when the caller guarantees
-    // the partition key is constant within each dedup-key group (see
-    // KeepLast.dedupClustered's contract), the dedup window partitions
-    // by the WRITE key and the separate clustering repartition below is
-    // unnecessary — one exchange of the merged relation instead of two.
-    // Write parallelism = touched-directory count (each dir gets one
-    // file; extra tasks would launch empty), session-capped.
-    val nWrite = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, touched.size))
-    val deduped =
-      if (clusteredDedup)
-        KeepLast.dedupClustered(combined, keys.map(col), dedupKeys, order, nWrite)
-      else KeepLast.dedup(combined, dedupKeys, order)
+    // the evolved schema rides THIS commit's headers (atomic with the
+    // CAS — round-14 advice: a sidecar publish decoupled from the commit
+    // can lose a column to a content race); emitted only when it differs
+    // from the previous tracked schema, so header bytes ∝ change
+    val schemaHeader =
+      if (!prevSchema.map(_.json).contains(m.schema.json))
+        Seq("schema" -> enc(m.schema.json))
+      else Nil
 
     val txnName = newTxnDirName(v)
     val txnDir = s"$path/data/$txnName"
-    // cluster by partition key before the write (the lock path's
-    // round-11 small-file fix, mirrored): without it every post-dedup
-    // task can emit a file into every touched partition dir — up to
-    // tasks × dirs fragments per merge, each a footer to open on every
-    // later read until compactManifest runs. EXPLICIT partition count
-    // (round-16): AQE coalesces the batch-sized exchange to one
-    // partition otherwise, serializing every touched dir's file write
-    // into a single task (the clusterManifest lesson).
-    (if (clusteredDedup) deduped
-     else deduped.repartition(nWrite, keys.map(col): _*))
+    m.toWrite
       // committer v2 per-write (guide §6): this is a writer-private NEW
       // directory whose visibility is gated by the manifest commit, so
       // task-commit renames straight to the destination are safe and the
@@ -855,24 +816,29 @@ object ManifestLake {
     // remap every touched partition to the new txn; new partitions are
     // whatever the write actually produced under txnDir
     val written = leafPartitions(fs, new Path(txnDir), new Path(txnDir))
-    val next = manifest -- touched ++ written.map(_ -> txnName).toMap
+    val next = manifest -- m.touched.map(relPath(keys, _)) ++
+      written.map(_ -> txnName).toMap
     commitManifest(fs, path, v, next,
       commitTag.map("tag" -> _).toSeq ++ schemaHeader ++ extraHeaders,
       base = Some(manifest), interval = confCheckpointInterval(spark))
     // The manifest header is the schema of record; the sidecar is a
-    // best-effort cache (legacy readers, lock-path compat). A sidecar
+    // best-effort cache (legacy readers, lock-path compat), refreshed
+    // whenever its content differs — so a sidecar left stale by an
+    // earlier failed publish self-heals on the next merge. A sidecar
     // failure AFTER the commit must not fail — or retry — the merge:
     // the commit already landed, reads resolve the header schema, and
     // re-running the merge would commit a duplicate version (round-14
     // advice, medium: the retry wrapper could not distinguish a
-    // post-commit failure from a doomed attempt).
-    try MergeWriter.writeStoredSchema(fs, path, lakeSchema)
+    // post-commit failure from a doomed attempt). An unreadable sidecar
+    // counts as differing, so it is rewritten too.
+    try MergeWriter.publishStoredSchema(fs, path,
+      scala.util.Try(MergeWriter.readStoredSchema(fs, path)).toOption.flatten, m.schema)
     catch { case scala.util.control.NonFatal(e) =>
       log.warn(s"ManifestLake: schema sidecar publish failed at $path AFTER " +
         "a successful commit — the manifest header schema is authoritative, " +
         "reads are unaffected; the next merge will refresh the sidecar", e)
     }
-    deduped
+    m.deduped
   }
 
   /** [[mergeKeyed]] with bounded optimistic retry: a lost commit CAS

@@ -2,7 +2,6 @@ package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.KeepLast
 
 /** Partitioned Parquet upsert sink — the reference's `save_to_parquet`
   * merge (crypto_collector.py:523–558) re-expressed for a distributed
@@ -27,13 +26,6 @@ import graft.operators.KeepLast
   */
 object MergeWriter {
   private val Keys = Seq("symbol", "interval", "data_type", "exchange", "date")
-
-  /** Above this many distinct touched partition-key combinations the
-    * affected-read filter switches from exact OR-of-equalities to a
-    * per-column InSet conjunction (see mergeKeyed) — Catalyst planning
-    * stays bounded however wide a batch is.
-    */
-  private val MaxExactTouchedCombos = 1000
 
   /** SINGLE-WRITER contract, made explicit and enforced (round-9
     * verdict, "what's missing" item 1): the merge is
@@ -102,7 +94,8 @@ object MergeWriter {
   // (new nullable columns accepted, type changes REJECTED loudly),
   // reads existing data through it (parquet fills absent columns with
   // null per file — by-name projection), and advances it atomically
-  // (tmp + rename) under the writer lock after a successful write.
+  // (tmp + rename) under the writer lock after a successful write that
+  // changed it.
 
   private def schemaSidecar(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_schema.json")
@@ -126,8 +119,15 @@ object MergeWriter {
     }
   }
 
-  private[lake] def writeStoredSchema(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                                      schema: org.apache.spark.sql.types.StructType): Unit = {
+  /** Publish `schema` as the tracked sidecar unless `published` — the
+    * sidecar content the caller read — already equals it: a merge that
+    * does not evolve the schema costs no create/delete/rename.
+    */
+  private[lake] def publishStoredSchema(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                                        published: Option[org.apache.spark.sql.types.StructType],
+                                        schema: org.apache.spark.sql.types.StructType): Unit = {
+    val json = schema.json
+    if (published.map(_.json).contains(json)) return
     val target = schemaSidecar(path)
     // writer-PRIVATE tmp: on the manifest path several optimistic
     // writers can reach this concurrently (the lock path serializes, the
@@ -136,7 +136,6 @@ object MergeWriter {
     // commit had already landed
     val tmp = new org.apache.hadoop.fs.Path(path,
       s"_graft_schema.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val json = schema.json
     val out = fs.create(tmp, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
     // delete+rename publish, bounded-retried: two concurrent publishers
@@ -162,29 +161,6 @@ object MergeWriter {
           s"MergeWriter: could not commit schema sidecar $target and the " +
             "surviving sidecar differs — re-run the merge")
     }
-  }
-
-  /** Validate `batch` against the lake's tracked schema and return the
-    * evolved table schema: tracked columns first (their order is the
-    * table's), genuinely new batch columns appended, everything
-    * nullable (an added column is null for every pre-existing row by
-    * construction). A column whose TYPE differs from the tracked one is
-    * rejected loudly — silent coercion is how a lake loses data.
-    */
-  private[graft] def evolveSchema(stored: org.apache.spark.sql.types.StructType,
-                                  batch: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
-    val conflicts = batch.fields.flatMap { f =>
-      stored.fields.find(_.name == f.name).filter(_.dataType != f.dataType)
-        .map(s => s"'${f.name}': lake has ${s.dataType.simpleString}, " +
-          s"batch has ${f.dataType.simpleString}")
-    }
-    if (conflicts.nonEmpty) throw new IllegalStateException(
-      "MergeWriter: batch changes the TYPE of existing lake column(s) — " +
-        "additive evolution only (new nullable columns); rewrite the lake " +
-        "explicitly for type migrations. Conflicts: " + conflicts.mkString("; "))
-    val newCols = batch.fields.filterNot(f => stored.fieldNames.contains(f.name))
-    org.apache.spark.sql.types.StructType(
-      (stored.fields ++ newCols).map(_.copy(nullable = true)))
   }
 
   /** Read the lake through its tracked schema (mixed-schema partitions
@@ -218,27 +194,26 @@ object MergeWriter {
       // constant per dedup group — the clustered dedup's contract holds
       clusteredDedup = true)
 
-  /** Shared keyed-merge implementation — static-pruned affected-partition
-    * read → unionByName → explicit-order dedup → dynamic overwrite, under
-    * the single-writer lock. Both dedup POLARITIES ride this one shape:
-    * the candle sink passes ascending `ingest_seq` (keep-LAST — a
-    * re-fetch is a correction) and the corpus sink passes its negation
-    * (FIRST-wins — a re-delivered document is interchangeable,
+  /** The lock protocol's keyed merge — [[KeyedMerge]]'s shared body
+    * with this protocol's read and commit: a static-pruned affected-
+    * partition read, then a dynamic overwrite under the single-writer
+    * lock. Both dedup POLARITIES ride this one shape: the candle sink
+    * passes ascending `ingest_seq` (keep-LAST — a re-fetch is a
+    * correction) and the corpus sink passes its negation (FIRST-wins — a
+    * re-delivered document is interchangeable,
     * [[graft.streaming.CorpusIngest.mergeDocs]]).
     *
-    * The affected read is pruned with a STATIC filter on the partition
-    * columns: the touched key set is bounded by the batch's distinct
-    * partition-key combinations — a handful of rows — so it collects to
-    * the driver and becomes an OR-of-equalities the scan prunes at
-    * PLANNING time (directory-level pruning; zero data files outside the
-    * touched partitions are opened). The previous formulation — a
-    * broadcast left-semi join on the partition keys — claimed
-    * "metadata-only pruning" but measured otherwise: dynamic partition
-    * pruning does not reliably fire for it, and the merge read the
-    * ENTIRE lake per batch (ScaleRehearsalSpec's 10× rehearsal: 212k
-    * records read against a 200k-row lake for a 1k-row batch). At 100 TB
-    * that is a lake scan per micro-batch — the exact failure the "cost
-    * scales with batch size" contract forbids.
+    * The affected read is pruned with ONE static partition predicate,
+    * `struct(keys) IN (touched combinations)`: Catalyst folds the literal
+    * list into an `InSet` that the scan evaluates per partition directory
+    * at PLANNING time (zero data files outside the touched partitions
+    * are opened). Its tree depth does not grow with the touched count; a
+    * left-deep OR of per-combination equalities overflows the default
+    * thread stack at ~400 combinations, which one backfill interval over
+    * 6 symbols × 5 exchanges × 14 days exceeds. A broadcast left-semi
+    * join on the partition keys is no substitute: dynamic partition
+    * pruning does not reliably fire for it, and the merge then reads the
+    * ENTIRE lake per batch (ScaleRehearsalSpec's merge-read rehearsal).
     *
     * Contract: `keys` columns in `tagged` are STRING-typed (both callers
     * derive them with date_format/lit), and `tagged` already carries the
@@ -266,124 +241,33 @@ object MergeWriter {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLock(fs, path) {
-    // Additive schema evolution: validate the batch against the tracked
-    // lake schema (type change = loud reject), evolve it with any new
-    // nullable columns, and read existing data THROUGH the evolved
-    // schema so partitions written before the new column still surface
-    // it (as null). First merge seeds the sidecar from the batch.
-    val lakeSchema = readStoredSchema(fs, path) match {
-      case Some(stored) => evolveSchema(stored, tagged.schema)
-      case None => org.apache.spark.sql.types.StructType(
-        tagged.schema.fields.map(_.copy(nullable = true)))
-    }
-    // touched-directory count when known (existing lake): caps the write
-    // exchange's parallelism at one task per output file
-    var nTouched = -1
-    val combined =
-      if (!fs.exists(hPath)) tagged
-      else {
-        val existing = spark.read.schema(lakeSchema).parquet(path)
-        val touched = tagged.select(keys.map(col): _*).distinct().collect()
-        nTouched = touched.length
-        // Contract guard (round-10 advice): a null partition-key value
-        // would (a) write a __HIVE_DEFAULT_PARTITION__ directory and
-        // (b) turn its OR-term into a never-true null comparison, so a
-        // later merge would silently DROP the null-keyed partition's
-        // existing rows. Both callers derive keys with date_format/lit
-        // over non-null inputs; fail loud if that invariant ever breaks.
-        touched.foreach { r =>
-          keys.indices.foreach { i =>
-            if (r.isNullAt(i)) throw new IllegalArgumentException(
-              s"MergeWriter: batch contains a NULL value for partition key " +
-                s"'${keys(i)}' — partition keys must be non-null strings " +
-                "(derive them with date_format/lit before merging)")
-          }
+      val stored = readStoredSchema(fs, path)
+      val m = KeyedMerge(spark, tagged, keys, dedupKeys, order, clusteredDedup,
+          stored, collectTouched = fs.exists(hPath)) { (schema, touched) =>
+        val touchedKeys = touched.map { vs =>
+          struct(keys.zip(vs).map { case (k, v) => lit(v).as(k) }: _*)
         }
-        if (touched.isEmpty) tagged
-        else {
-          // OR-of-equalities planning cost grows with the touched-combo
-          // count; past a cap, fall back to one per-column InSet
-          // conjunction — an OVER-approximation of the touched set
-          // (cross product of per-column values), still statically
-          // pruned at planning time. Reading extra partitions is safe:
-          // dedup leaves their rows unchanged and dynamic overwrite
-          // rewrites them with identical content (extra IO, no data
-          // change). Correct either way; bounded planning always.
-          val cond =
-            if (touched.length <= MaxExactTouchedCombos)
-              touched.map { r =>
-                keys.zipWithIndex.map { case (k, i) => col(k) === lit(r.getString(i)) }
-                  .reduce(_ && _)
-              }.reduce(_ || _)
-            else {
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"MergeWriter: ${touched.length} touched partition-key " +
-                  s"combinations exceed $MaxExactTouchedCombos; falling back " +
-                  "to per-column InSet pruning (over-approximate read)")
-              keys.zipWithIndex.map { case (k, i) =>
-                col(k).isin(touched.map(_.getString(i)).distinct.toSeq: _*)
-              }.reduce(_ && _)
-            }
-          val affected = existing.filter(cond)
-            // Materialize and cut lineage: Spark refuses to overwrite a
-            // path its own read plan references. Affected partitions are
-            // batch-sized, so executor-local checkpoint storage is
-            // bounded.
-            .localCheckpoint()
-          // allowMissingColumns both ways: the batch may ADD a column
-          // (existing rows get null) or a caller may still send the old
-          // shape after the lake evolved (batch rows get null). Dedup
-          // then applies whole-row keep-last/keep-first per key — a
-          // winning old-shape row carries null in the new column, which
-          // is the correct "that writer never knew the field" answer.
-          affected.unionByName(tagged, allowMissingColumns = true)
-        }
+        Some(spark.read.schema(schema).parquet(path)
+          .filter(struct(keys.map(col): _*).isin(touchedKeys: _*))
+          // Materialize and cut lineage: Spark refuses to overwrite a
+          // path its own read plan references. Affected partitions are
+          // batch-sized, so executor-local checkpoint storage is bounded.
+          .localCheckpoint())
       }
-    // clusteredDedup (round-16, guide §2.4): when the caller guarantees
-    // partition-key stability per dedup group (KeepLast.dedupClustered's
-    // contract), the dedup window partitions by the WRITE key and the
-    // separate clustering repartition is unnecessary — one exchange of
-    // the merged relation instead of two.
-    val nWrite =
-      if (nTouched > 0) math.min(spark.sparkContext.defaultParallelism, nTouched)
-      else spark.sparkContext.defaultParallelism
-    val deduped =
-      if (clusteredDedup)
-        KeepLast.dedupClustered(combined, keys.map(col), dedupKeys, order, nWrite)
-      else KeepLast.dedup(combined, dedupKeys, order)
-    // Cluster rows by partition key before the write: without this,
-    // every post-dedup task can emit a file into every touched
-    // partition directory (up to tasks × dirs small files per merge —
-    // q168's four-merge replay produced ~1000, and every later read
-    // pays their footers). One batch-sized shuffle buys one file per
-    // touched partition. Right-sized while per-merge per-partition
-    // volume is modest (the candle/dimension lakes here); a deployment
-    // whose single-partition batches outgrow a task adds a
-    // pmod(hash(dedupKeys), k) split term to re-widen.
-    // explicit partition count (round-16): without it AQE coalesces this
-    // batch-sized exchange to ONE partition and a single task writes
-    // every touched partition directory's file serially (measured 1.1 s
-    // of q168's four-merge replay, per merge) — the same lesson as
-    // clusterManifest's parallel rewrite. Hash on keys keeps one file
-    // per directory; the count is the touched-directory count when
-    // known, session-capped — never a constant.
-    val clustered =
-      if (clusteredDedup) deduped
-      else deduped.repartition(nWrite, keys.map(col): _*)
-    // Per-write option, NOT session conf: a session-global mutation here
-    // would leak dynamic-overwrite semantics to every concurrent writer
-    // sharing the session.
-    clustered.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(keys: _*)
-      .parquet(path)
-    // advance the tracked schema only after the data write succeeded —
-    // a crash mid-write leaves the OLD sidecar, which still reads every
-    // surviving file correctly (by-name projection ignores extra
-    // columns in the partially-written files dynamic overwrite replaced)
-    writeStoredSchema(fs, path, lakeSchema)
-    deduped
+      // Per-write option, NOT session conf: a session-global mutation
+      // here would leak dynamic-overwrite semantics to every concurrent
+      // writer sharing the session.
+      m.toWrite.write
+        .mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(keys: _*)
+        .parquet(path)
+      // advance the tracked schema only after the data write succeeded —
+      // a crash mid-write leaves the OLD sidecar, which still reads every
+      // surviving file correctly (by-name projection ignores extra
+      // columns in the partially-written files dynamic overwrite replaced)
+      publishStoredSchema(fs, path, stored, m.schema)
+      m.deduped
     }
   }
 }

@@ -6,7 +6,7 @@ import graft.sources.Tables._
 
 /** Lake-maintenance operator queries: CDC / slowly-changing-dimension
   * history ([[graft.lake.Scd2Writer]], q168) and physical-layout
-  * economics ([[graft.lake.Compactor.zOrderRewrite]], q171).
+  * economics ([[graft.lake.Compactor.clusterManifest]], q171).
   */
 object DimOps {
 
@@ -90,8 +90,9 @@ object DimOps {
       |ORDER BY custkey, valid_from, since_order""".stripMargin
 
   /** q171 — Z-order layout skipping audit: the decision query behind
-    * [[graft.lake.Compactor.zOrderRewrite]] (would re-clustering the
-    * events lake on the Morton curve of (user, hour) actually pay?).
+    * [[graft.lake.Compactor.clusterManifest]] with a Morton sort key
+    * (would re-clustering the events lake on the Morton curve of
+    * (user, hour) actually pay?).
     * Events map to the two normalized dimensions (user_id; hour bucket
     * relative to the corpus minimum — both ≤ 2¹⁶ here, the
     * [[graft.functions.ZInterleave]] normalization contract), and two
@@ -104,8 +105,8 @@ object DimOps {
     * files span every user (umin = 0, nothing user-prunes), Morton
     * files are tight in both dims, and the rows-scanned gap between the
     * two rows of output IS the audit's answer. File-level ground truth
-    * for the real writer lives in CompactorSpec (input_file_name spans
-    * after an actual zOrderRewrite).
+    * for the real writer lives in CompactorSpec's clusterManifest Morton
+    * row (FileStats-pruned boxes after an actual rewrite).
     *
     * Scale: one events pass computes dims + both file keys (the bounds
     * are a 1-row broadcast); per-layout stats are partial-combine
@@ -1079,8 +1080,9 @@ object DimOps {
 
   /** q200 — THREE-dimensional Z-order skipping audit, q171's decision
     * query extended to the n-ary kernel ([[graft.functions.ZInterleaveN]],
-    * [[graft.lake.Compactor.zOrderRewriteN]]): would clustering the
-    * events lake on (user, hour, value-band) pay against the 2-dim
+    * [[graft.lake.Compactor.clusterManifest]] with a `z_interleave_n`
+    * sort key): would clustering the events lake on (user, hour,
+    * value-band) pay against the 2-dim
     * (user, hour) curve and a time-sorted ingest layout, for a query
     * box constrained on ALL THREE dimensions? Each extra interleaved
     * dimension trades per-dimension tightness (21 bits/dim at k=3 vs 16
@@ -1088,7 +1090,7 @@ object DimOps {
     * the real data: per simulated layout, how many files survive
     * footer min/max pruning of the 10 % box and how many rows they
     * hold. File-level ground truth for the real writer lives in
-    * CompactorSpec's zOrderRewriteN row.
+    * CompactorSpec's clusterManifest Morton row (its 3-dim input).
     *
     * Scale: one events pass computes dims + all three file keys
     * (bounds are a 1-row broadcast); per-layout stats are

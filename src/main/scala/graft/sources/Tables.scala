@@ -12,26 +12,34 @@ import org.apache.spark.sql.types.LongType
   * partition pruning keys off the directory layout, not this code.
   */
 object Tables {
-  /** Inferred-schema memo, keyed by full path. Every `spark.read.parquet`
-    * call pays a driver-side footer read for schema inference; a bench or
-    * verify run resolves the same nine immutable test tables hundreds of
-    * times, so the first resolution per path caches the inferred schema
-    * and later reads supply it explicitly (identical StructType — the
-    * memo stores exactly what inference produced, per path, so a
-    * different sfDir can never see a stale schema). Pure plan-time
-    * metadata: no data or results are cached.
+  /** Inferred-schema memo, keyed by (path, length, modification time).
+    * Every `spark.read.parquet` call pays a driver-side footer read for
+    * schema inference; a bench or verify run resolves the same nine
+    * immutable test tables hundreds of times, so the first resolution of
+    * a file caches the inferred schema and later reads supply it
+    * explicitly (identical StructType — the memo stores exactly what
+    * inference produced). A file rewritten at the same path changes its
+    * length or mtime, so it is inferred afresh rather than read through a
+    * stale schema. Pure plan-time metadata: no data or results are cached.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val cached = schemaMemo.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaMemo.putIfAbsent(path, df.schema)
-      df
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing table falls through to the reader's own not-found error
+    val key = try {
+      val st = fs.getFileStatus(hPath)
+      Some((path, st.getLen, st.getModificationTime))
+    } catch { case _: java.io.FileNotFoundException => None }
+    key.flatMap(k => Option(schemaMemo.get(k))) match {
+      case Some(cached) => spark.read.schema(cached).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(schemaMemo.putIfAbsent(_, df.schema))
+        df
     }
   }
 

@@ -3,12 +3,14 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
-import graft.lake.{Compactor, MergeWriter}
+import graft.lake.{Compactor, ManifestLake, MergeWriter}
 import graft.model.Candle
 
-/** Lake compaction (K1 maintenance): fragmented partitions collapse to
-  * one file each, data survives byte-identical, untouched partitions'
-  * files are left alone, and a compacted lake is a no-op.
+/** Manifest-lake layout maintenance (K1): fragmented committed
+  * partitions collapse to one file each through one manifest commit,
+  * data survives byte-identical, unfragmented partitions keep their
+  * files, and clustering rewrites make footer statistics prune. A plain
+  * partitioned lake is compacted by importing it first.
   */
 class CompactorSpec extends SparkSpec {
   import spark.implicits._
@@ -24,200 +26,84 @@ class CompactorSpec extends SparkSpec {
   private def tmpLake(): String =
     Files.createTempDirectory("graft_compact").toString + "/lake"
 
-  private def fileCounts(lake: String): Map[String, Int] =
-    Compactor.fragmentation(spark, lake)
-      .map { case (part, n, _) => part("date") + "/" + part("exchange") -> n }
-      .toMap
-
-  test("fragmented partition compacts to one file; rows byte-identical") {
+  /** A plain partitioned lake whose one partition holds `files` files. */
+  private def fragmentedPlainLake(nRows: Int, files: Int): String = {
     val lake = tmpLake()
-    // 4-way repartition fans one day's candles across 4 files
-    val batch = MergeWriter.withPartitionCols(
-      candles((0 until 8).map(i => (T0 + i * 900000L, 100.0 + i, "coinbase")): _*),
-      "15m", "spot").repartition(4)
-    batch.withColumn("ingest_seq", org.apache.spark.sql.functions.lit(1L))
+    MergeWriter.withPartitionCols(
+      candles((0 until nRows).map(i => (T0 + i * 900000L, 100.0 + i, "coinbase")): _*),
+      "15m", "spot")
+      .withColumn("ingest_seq", org.apache.spark.sql.functions.lit(1L))
+      .repartition(files)
       .write.partitionBy("symbol", "interval", "data_type", "exchange", "date")
       .parquet(lake)
+    lake
+  }
+
+  /** date/exchange → parquet files of each committed manifest entry. */
+  private def entryFiles(lake: String): Map[String, Set[String]] = {
+    val fs = new org.apache.hadoop.fs.Path(lake)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ManifestLake.currentEntries(spark, lake).map { case (rel, txn) =>
+      val base = if (txn == "@root") lake else s"$lake/data/$txn"
+      val part = rel.split("/").map(_.split("=", 2)).map(kv => kv(0) -> kv(1)).toMap
+      part("date") + "/" + part("exchange") ->
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/$rel"))
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          .map(_.getPath.toString).toSet
+    }
+  }
+
+  private def fileCounts(lake: String): Map[String, Int] =
+    entryFiles(lake).map { case (k, fs) => k -> fs.size }
+
+  test("fragmented partition compacts to one file; rows byte-identical") {
+    // 4-way repartition fans one day's candles across 4 files
+    val lake = fragmentedPlainLake(8, 4)
+    ManifestLake.importLockLake(spark, lake)
     assert(fileCounts(lake).values.head == 4)
 
-    val before = spark.read.parquet(lake).orderBy("timestamp").collect().toSeq
-    val summary = Compactor.compact(spark, lake).collect()
+    val before = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect().toSeq
+    val summary = Compactor.compactManifest(spark, lake).collect()
     assert(summary.length == 1 && summary.head.getAs[Int]("files_before") == 4)
     assert(fileCounts(lake).values.head == 1)
-    val after = spark.read.parquet(lake).orderBy("timestamp").collect().toSeq
+    val after = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect().toSeq
     assert(after == before, "compaction must not change the data")
   }
 
   test("only fragmented partitions rewrite; single-file partitions keep their file") {
     val lake = tmpLake()
-    // day 1: single file; day 2: 3 files
-    MergeWriter.merge(spark, MergeWriter.withPartitionCols(
-      candles((T0, 100.0, "coinbase")), "15m", "spot").coalesce(1), lake, 1)
-    MergeWriter.withPartitionCols(
-      candles((0 until 6).map(i => (T0 + Day + i * 900000L, 200.0 + i, "coinbase")): _*),
-      "15m", "spot")
-      .withColumn("ingest_seq", org.apache.spark.sql.functions.lit(2L))
-      .repartition(3)
-      .write.mode("append")
-      .partitionBy("symbol", "interval", "data_type", "exchange", "date")
-      .parquet(lake)
+    spark.conf.set("spark.graft.lake.commit", "manifest")
+    try {
+      // day 1: single file; day 2: 3 files (the merge's one task rolls a
+      // new file every maxRecordsPerFile records)
+      MergeWriter.merge(spark, MergeWriter.withPartitionCols(
+        candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
+      spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+      try MergeWriter.merge(spark, MergeWriter.withPartitionCols(
+        candles((0 until 6).map(i => (T0 + Day + i * 900000L, 200.0 + i, "coinbase")): _*),
+        "15m", "spot"), lake, 2)
+      finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    } finally spark.conf.unset("spark.graft.lake.commit")
+    val day1Before = entryFiles(lake)("20210101/coinbase")
+    assert(fileCounts(lake) == Map("20210101/coinbase" -> 1, "20210102/coinbase" -> 3))
 
-    val hPath = new org.apache.hadoop.fs.Path(lake)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def day1Files(): Set[String] = {
-      val it = fs.listFiles(hPath, true)
-      val b = scala.collection.mutable.Set.empty[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.toString.contains("date=20210101") &&
-          f.getPath.getName.endsWith(".parquet")) b += f.getPath.toString
-      }
-      b.toSet
-    }
-    val day1Before = day1Files()
-
-    val summary = Compactor.compact(spark, lake).collect()
-    assert(summary.map(_.getAs[String]("date")).toSeq == Seq("20210102"),
-      s"only the fragmented day must compact: ${summary.mkString(",")}")
-    assert(day1Files() == day1Before,
-      "dynamic overwrite must not touch the single-file partition")
+    val summary = Compactor.compactManifest(spark, lake).collect()
+    assert(summary.map(_.getAs[String]("partition")).forall(_.contains("date=20210102")) &&
+      summary.length == 1, s"only the fragmented day must compact: ${summary.mkString(",")}")
+    assert(entryFiles(lake)("20210101/coinbase") == day1Before,
+      "the single-file partition must keep its committed file")
     assert(fileCounts(lake) == Map("20210101/coinbase" -> 1, "20210102/coinbase" -> 1))
-  }
-
-  test("zOrderRewrite: real files get tight min/max in BOTH dims; a user predicate prunes") {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString + "/t"
-    // 64×64 dimension grid, written the way a time-ordered ingest lands:
-    // sorted by h → every file spans the FULL user range
-    val grid = (0 until 64).flatMap(u => (0 until 64).map(h => (u.toLong, h.toLong)))
-    grid.toDF("u", "h").repartitionByRange(16, $"h").sortWithinPartitions($"h")
-      .write.parquet(dir)
-    def fileSpans() = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min($"u").as("umin"), max($"u").as("umax"), count(lit(1)).as("n"))
-      .collect()
-    val before = fileSpans()
-    assert(before.forall(r => r.getAs[Long]("umin") == 0L &&
-      r.getAs[Long]("umax") == 63L),
-      "time-sorted files must span all users — nothing user-prunes")
-    graft.lake.Compactor.zOrderRewrite(spark, dir, "u", "h", 16)
-    val after = fileSpans()
-    // same data, same file count target
-    assert(after.map(_.getAs[Long]("n")).sum == 4096L)
-    val data = spark.read.parquet(dir).as[(Long, Long)].collect().sorted
-    assert(data.toSeq == grid.sorted.toSeq, "rewrite must not change data")
-    // footer stats now prune: only files whose u-span reaches [0, 7]
-    // survive a u <= 7 predicate — a contiguous z range covers a bounded
-    // u-box, so most files' umin exceeds the predicate
-    val hit = after.count(_.getAs[Long]("umin") <= 7L)
-    assert(hit < after.length / 2,
-      s"expected most of ${after.length} z-files to user-prune, $hit hit")
-  }
-
-  test("zOrderRewriteN: 3-dim rewrite bounds every file's span in ALL dims; each dim prunes") {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder3").toString + "/t"
-    // 16×16×16 grid written time-sorted: every file spans all u and all v
-    val grid = (0 until 16).flatMap(u => (0 until 16).flatMap(h =>
-      (0 until 16).map(v => (u.toLong, h.toLong, v.toLong))))
-    grid.toDF("u", "h", "v").repartitionByRange(16, $"h").sortWithinPartitions($"h")
-      .write.parquet(dir)
-    def fileSpans() = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min($"u").as("umin"), min($"v").as("vmin"), count(lit(1)).as("n"))
-      .collect()
-    val before = fileSpans()
-    assert(before.forall(r => r.getAs[Long]("umin") == 0L &&
-      r.getAs[Long]("vmin") == 0L),
-      "time-sorted files span all u and v — nothing prunes on either")
-    // 64 files over the 16^3 grid: each aligned 64-code Morton block
-    // spans a 4×4×4 box, so the file index carries ~2 bits of EVERY
-    // dimension — coarser per-dim than a 2-dim curve with the same file
-    // count (the k-dim trade-off the audit query quantifies), but
-    // enough that a tight predicate on any single dim prunes ~3/4
-    graft.lake.Compactor.zOrderRewriteN(spark, dir, Seq("u", "h", "v"), 64)
-    val after = fileSpans()
-    assert(after.map(_.getAs[Long]("n")).sum == 4096L)
-    val data = spark.read.parquet(dir).as[(Long, Long, Long)].collect().sorted
-    assert(data.toSeq == grid.sorted.toSeq, "rewrite must not change data")
-    // a contiguous 3-dim Morton range bounds a box in EVERY dimension:
-    // predicates on u AND on v must now both prune most files
-    assert(after.count(_.getAs[Long]("umin") <= 1L) < after.length / 2,
-      "u-predicate must prune most 3-dim z-files")
-    assert(after.count(_.getAs[Long]("vmin") <= 1L) < after.length / 2,
-      "v-predicate must prune most 3-dim z-files")
-  }
-
-  test("compacting a compacted (or absent) lake is a no-op") {
-    val lake = tmpLake()
-    assert(Compactor.compact(spark, lake).isEmpty)
-    MergeWriter.merge(spark, MergeWriter.withPartitionCols(
-      candles((T0, 100.0, "coinbase")), "15m", "spot").coalesce(1), lake, 1)
-    Compactor.compact(spark, lake)
-    assert(Compactor.compact(spark, lake).isEmpty)
+    assert(ManifestLake.read(spark, lake).count() == 7)
   }
 
   test("maxRecordsPerFile splits an oversized partition into bounded files") {
-    val lake = tmpLake()
-    MergeWriter.withPartitionCols(
-      candles((0 until 40).map(i => (T0 + i * 900000L, 100.0 + i, "coinbase")): _*),
-      "15m", "spot")
-      .withColumn("ingest_seq", org.apache.spark.sql.functions.lit(1L))
-      .repartition(4)
-      .write.partitionBy("symbol", "interval", "data_type", "exchange", "date")
-      .parquet(lake)
-    Compactor.compact(spark, lake, maxFiles = 1, maxRecordsPerFile = 15L)
+    val lake = fragmentedPlainLake(40, 4)
+    ManifestLake.importLockLake(spark, lake)
+    Compactor.compactManifest(spark, lake, maxFiles = 1, maxRecordsPerFile = 15L)
     // 40 rows / 15-per-file cap → 3 files, still fewer than the 4 input
     val counts = fileCounts(lake)
     assert(counts.values.head == 3, s"expected 3 capped files: $counts")
-    assert(spark.read.parquet(lake).count() == 40)
-  }
-
-  test("compaction on a held lake fails loud instead of racing the holder (round-11 item 1)") {
-    // Compaction is THE maintenance job that runs next to live ingest:
-    // an unlocked rewrite racing a merge reads pre-merge state and
-    // overwrites the merge's rows away. It now takes the same writer
-    // lock as the merge — second-comer fails loud, nothing interleaves.
-    val lake = tmpLake()
-    MergeWriter.withPartitionCols(
-      candles((0 until 8).map(i => (T0 + i * 900000L, 100.0 + i, "coinbase")): _*),
-      "15m", "spot")
-      .withColumn("ingest_seq", org.apache.spark.sql.functions.lit(1L))
-      .repartition(4)
-      .write.partitionBy("symbol", "interval", "data_type", "exchange", "date")
-      .parquet(lake)
-    val fs = new org.apache.hadoop.fs.Path(lake)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lock = new org.apache.hadoop.fs.Path(lake + ".__writer_lock")
-    fs.create(lock, false).close()
-    try {
-      val e = intercept[IllegalStateException] { Compactor.compact(spark, lake) }
-      assert(e.getMessage.contains("locked"), e.getMessage)
-      // the refused compaction rewrote nothing
-      assert(fileCounts(lake).values.head == 4)
-    } finally fs.delete(lock, false)
-    // lock released → compaction proceeds
-    Compactor.compact(spark, lake)
-    assert(fileCounts(lake).values.head == 1)
-  }
-
-  test("compact and zOrderRewrite refuse a manifest lake loudly (round-11 item 2)") {
-    import graft.lake.ManifestLake
-    val lake = tmpLake()
-    spark.conf.set("spark.graft.lake.commit", "manifest")
-    try {
-      MergeWriter.merge(spark, MergeWriter.withPartitionCols(
-        candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
-      assert(ManifestLake.isManifestLake(spark, lake))
-      val e1 = intercept[IllegalArgumentException] { Compactor.compact(spark, lake) }
-      assert(e1.getMessage.contains("manifest"), e1.getMessage)
-      val e2 = intercept[IllegalArgumentException] {
-        Compactor.zOrderRewrite(spark, lake, "close", "volume", 4)
-      }
-      assert(e2.getMessage.contains("manifest"), e2.getMessage)
-      // nothing was disturbed by the refusals
-      assert(MergeWriter.readLake(spark, lake).count() == 1)
-    } finally spark.conf.unset("spark.graft.lake.commit")
+    assert(ManifestLake.read(spark, lake).count() == 40)
   }
 
   test("compactManifest: fragmented committed partitions collapse via one manifest commit; snapshots survive") {
@@ -287,6 +173,33 @@ class CompactorSpec extends SparkSpec {
     val yOnly = FileStats.readSkipping(spark, lake, Seq(ColRange("y", "0", "7")))
     assert(xOnly.filesScanned == 4 && yOnly.filesScanned == 4,
       s"one dim = one quadrant row/column: ${xOnly.filesScanned}, ${yOnly.filesScanned}")
+
+    // 3-dim key: a 16×16×16 grid written x-major; 64-row files are the
+    // aligned 64-code Morton blocks, each a 4×4×4 box, so every single
+    // dimension prunes 3/4 of the files and a 4×4×4 box prunes to one
+    val lake3 = tmpLake()
+    val grid = (0 until 4096).map(i =>
+      (i.toLong, (i / 256).toLong, (i / 16 % 16).toLong, (i % 16).toLong, "p"))
+      .toDF("id", "x", "y", "z", "part")
+    ManifestLake.mergeKeyed(spark, grid, lake3, keys = Seq("part"),
+      dedupKeys = Seq($"id"), order = Seq($"id"))
+    Compactor.clusterManifest(spark, lake3, Seq("z_interleave_n(" +
+      "cast(x as bigint), cast(y as bigint), cast(z as bigint))"), 64L)
+    FileStats.collectStats(spark, lake3, Seq("x", "y", "z"))
+    val box3 = FileStats.readSkipping(spark, lake3, Seq(ColRange("x", "0", "3"),
+      ColRange("y", "4", "7"), ColRange("z", "8", "11")))
+    assert(box3.filesTotal == 64, s"expected 64 files, got ${box3.filesTotal}")
+    assert(box3.filesScanned == 1,
+      s"an aligned 4×4×4 box is exactly one Morton block: ${box3.filesScanned}")
+    assert(box3.df.filter($"x" <= 3 && $"y".between(4, 7) && $"z".between(8, 11))
+      .count() == 64, "the pruned scan must still produce every box row")
+    for (d <- Seq("x", "y", "z")) {
+      val one = FileStats.readSkipping(spark, lake3, Seq(ColRange(d, "0", "3")))
+      assert(one.filesScanned == 16, s"a $d range must prune 3/4: ${one.filesScanned}")
+    }
+    assert(ManifestLake.read(spark, lake3).as[(Long, Long, Long, Long, String)]
+      .collect().sortBy(_._1).toSeq == grid.as[(Long, Long, Long, Long, String)]
+      .collect().toSeq, "the rewrite must not change data")
   }
 
   test("compactManifest fragmentation counts ride the stats sidecars: zero LISTs on a statted lake; @root always relocates") {

@@ -4,7 +4,8 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.lake.MergeWriter
+import scala.jdk.CollectionConverters._
+import graft.lake.{ManifestLake, MergeWriter}
 import graft.model.Candle
 
 /** Merge-upsert semantics (K2): keep-last per key, idempotence, partition
@@ -160,5 +161,89 @@ class MergeWriterSpec extends SparkSpec {
     MergeWriter.merge(spark, b, lake, 1)
     assert(!fs.exists(lock), "lock must release after a successful merge")
     assert(spark.read.parquet(lake).count() == 1)
+  }
+
+  test("schema sidecar is republished only when its content changes") {
+    val lake = tmpLake()
+    val sidecar = new java.io.File(s"$lake/_graft_schema.json")
+    def day(i: Int) = MergeWriter.withPartitionCols(
+      candles((T0 + i * Day, 100.0 + i, "coinbase")), "15m", "spot")
+    MergeWriter.merge(spark, day(0), lake, 1)
+    assert(sidecar.exists(), "the first merge seeds the sidecar")
+    val seeded = sidecar.lastModified()
+    // same schema: no create/delete/rename of the sidecar
+    MergeWriter.merge(spark, day(1), lake, 2)
+    assert(sidecar.lastModified() == seeded,
+      "a same-schema merge must leave the sidecar untouched")
+    // evolving merge: the sidecar is rewritten with the new column
+    MergeWriter.merge(spark, day(2).withColumn("vwap", lit(1.25)), lake, 3)
+    assert(sidecar.lastModified() != seeded, "an evolving merge must rewrite the sidecar")
+    assert(MergeWriter.storedSchema(spark, lake).exists(_.fieldNames.contains("vwap")))
+
+    // manifest path: the header schema is authoritative, and a sidecar
+    // left stale (an earlier post-commit publish failed) self-heals on
+    // the next merge even when that merge does not evolve the schema
+    val mLake = tmpLake()
+    val mSidecar = new java.io.File(s"$mLake/_graft_schema.json")
+    def rows(id: Long) = Seq((id, 1.0, "a", id)).toDF("id", "v", "part", "seq")
+    def mMerge(id: Long): Unit = ManifestLake.mergeKeyed(spark, rows(id), mLake,
+      keys = Seq("part"), dedupKeys = Seq($"id"), order = Seq($"seq"))
+    mMerge(1L)
+    val good = new String(java.nio.file.Files.readAllBytes(mSidecar.toPath), "UTF-8")
+    val fs = new org.apache.hadoop.fs.Path(mLake)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stale = fs.create(new org.apache.hadoop.fs.Path(mSidecar.getPath), true)
+    try stale.write(rows(0L).drop("seq").schema.json.getBytes("UTF-8")) finally stale.close()
+    mMerge(2L)
+    assert(new String(java.nio.file.Files.readAllBytes(mSidecar.toPath), "UTF-8") == good,
+      "a stale sidecar must be refreshed by the next manifest merge")
+    val healed = mSidecar.lastModified()
+    mMerge(3L)
+    assert(mSidecar.lastModified() == healed,
+      "a same-schema manifest merge must leave a current sidecar untouched")
+  }
+
+  test("wide merges: hundreds to thousands of touched partitions plan, prune and leave siblings alone") {
+    // One backfill interval over 6 symbols x 5 exchanges x 14 days
+    // touches 420 partitions; the affected-read predicate must neither
+    // overflow the default stack nor widen the read beyond them.
+    val exchanges = Seq("binance", "bybit", "coinbase", "kraken", "kucoin")
+    val untouchedRows = 20000
+    for (nTouched <- Seq(600, 1500)) {
+      val lake = tmpLake()
+      val combos = for {
+        s <- 0 until 6; e <- exchanges; d <- 0 until nTouched / 30
+      } yield (s"S$s-USDT", e, T0 + d * Day)
+      def batch(close: Double) = MergeWriter.withPartitionCols(combos.map { case (s, e, ts) =>
+        Candle(new Timestamp(ts), 1.0, 2.0, 0.5, close, 10.0, s, e)
+      }.toDF(), "15m", "spot")
+      // siblings the merge must not read or rewrite: one symbol, 4 days
+      val siblings = MergeWriter.withPartitionCols((0 until untouchedRows).map { i =>
+        Candle(new Timestamp(T0 + (i % 4) * Day + (i / 4) * 1000L), 1.0, 2.0, 0.5,
+          1.0, 10.0, "U-USDT", "coinbase")
+      }.toDF(), "15m", "spot")
+      MergeWriter.merge(spark, batch(100.0).unionByName(siblings), lake, 1)
+      val siblingRoot = java.nio.file.Paths.get(lake, "symbol=U-USDT")
+      def siblingFiles(): Map[String, Seq[Byte]] = {
+        val it = java.nio.file.Files.walk(siblingRoot)
+        try it.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .map(p => p.toString -> java.nio.file.Files.readAllBytes(p).toSeq).toMap
+        finally it.close()
+      }
+      val before = siblingFiles()
+      assert(before.size == 4)
+
+      val read = inputRecords { MergeWriter.merge(spark, batch(200.0), lake, 2) }
+      // the touched partitions hold one row each: read once from parquet
+      // and once from the lineage-cut checkpoint; the siblings' 20k rows
+      // would blow this bound if the predicate failed to prune
+      assert(read <= 4L * nTouched,
+        s"$nTouched-partition merge read $read records — the affected read is not pruned")
+      assert(siblingFiles() == before, "untouched partition files must stay byte-identical")
+      val out = spark.read.parquet(lake)
+      assert(out.count() == nTouched + untouchedRows)
+      assert(out.filter($"symbol" =!= "U-USDT" && $"close" =!= 200.0).isEmpty,
+        "every touched row must carry the later writer's value")
+    }
   }
 }

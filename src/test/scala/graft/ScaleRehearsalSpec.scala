@@ -287,20 +287,6 @@ class ScaleRehearsalSpec extends SparkSpec {
     assert(removedOk, "exactly the non-canonical members of each dup group must be rewritten")
   }
 
-  /** Total file-scan records read across every task inside `body`. */
-  private def inputRecords(body: => Unit): Long = {
-    val tot = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null && e.taskMetrics.inputMetrics != null)
-          tot.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { body; Thread.sleep(1500) /* drain the async listener bus */ }
-    finally spark.sparkContext.removeSparkListener(listener)
-    tot.get()
-  }
-
   test("merge reads scale with the batch, not the lake (streaming-tier rehearsal at 10x)", SlowTag) {
     // The MergeWriter claim under test: "the merge only ever
     // reads/writes the partitions present in the incoming batch, so

@@ -10,6 +10,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Total file-scan records read across every task inside `body`
+    * (parquet scans and cached-block reads both count). */
+  def inputRecords(body: => Unit): Long = {
+    val tot = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.inputMetrics != null)
+          tot.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; Thread.sleep(1500) /* drain the async listener bus */ }
+    finally spark.sparkContext.removeSparkListener(listener)
+    tot.get()
+  }
+
   override def afterAll(): Unit = {
     // session shared across suites — do not stop
     super.afterAll()
