@@ -76,6 +76,14 @@ object Session {
       // staging-move interplay), so the manifest txn writes opt into v2
       // per-write (ManifestLake) and the lock path keeps v1. _SUCCESS
       // markers stay ON: materializeOnce's torn-build publish gate.
+      // Whole-stage codegen names each class after its stage id, so two
+      // stages with the same code (one exchange normalizer at different
+      // positions of a backfill's union) miss the codegen cache and
+      // compile twice. Without the id they share one class. A 6-symbol ×
+      // 5-interval × 5-exchange fan-out in one merge (150 union branches,
+      // BackfillSpec) compiled 322 classes on its first call and 322 again
+      // on a repeat with ids in the names; without them, 32 and 0.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.driver.maxResultSize", "4g")
       // bucketed-table queries (q122) write through the session catalog;

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.lake.MergeWriter
 import graft.normalize.Intervals
 
@@ -71,20 +70,27 @@ object Backfill {
       case None                     => Some((startMs, endMs))
     }
 
-  /** Execute a backfill: fetch every chunk, union, tag, merge into the
-    * lake partitioned by (symbol, interval, data_type, exchange, date).
-    * Chunks of the same interval merge in one pass (one shuffle per
-    * interval, not per chunk — the reference pays one merge per chunk).
+  /** Execute a backfill: fetch every chunk, tag each with its own
+    * interval, union, and merge into the lake partitioned by (symbol,
+    * interval, data_type, exchange, date) — one keyed merge per call (the
+    * reference pays one merge per chunk). `interval` is a partition and
+    * dedup key, so mixing intervals in one batch changes no row.
     */
   def run(spark: SparkSession, chunks: Seq[Chunk],
           fetch: Chunk => DataFrame, lakePath: String,
-          ingestSeq: Long, dataType: String = "spot"): Unit = {
-    chunks.groupBy(_.interval).foreach { case (interval, ivChunks) =>
-      val unioned = ivChunks.map(fetch).reduce(_ unionByName _)
-      val tagged = MergeWriter.withPartitionCols(unioned, interval, dataType)
-      MergeWriter.merge(spark, tagged, lakePath, ingestSeq)
-    }
-  }
+          ingestSeq: Long, dataType: String = "spot"): Unit =
+    mergeOnce(spark, chunks.map(c => MergeWriter.withPartitionCols(fetch(c), c.interval, dataType)),
+      lakePath, ingestSeq)
+
+  /** One merge of every tagged frame, or none when there is nothing to
+    * fetch. Same-shaped union branches share one generated class
+    * ([[graft.Session.build]] keeps stage ids out of class names), so a
+    * wide union compiles once per normalizer, not once per branch.
+    */
+  private def mergeOnce(spark: SparkSession, tagged: Seq[DataFrame],
+                        lakePath: String, ingestSeq: Long): Unit =
+    if (tagged.nonEmpty)
+      MergeWriter.merge(spark, tagged.reduce(_ unionByName _), lakePath, ingestSeq)
 
   /** Derivatives (perpetual futures) lifecycle — part of the reference's
     * declared contract, but EVERY venue returns empty
@@ -115,26 +121,20 @@ object Backfill {
   /** Execute a backfill with the reference's per-chunk exchange fan-out
     * (`collect_spot_data`, crypto_collector.py:563–585): every chunk is
     * fetched from every exchange — availability-clamped per (exchange,
-    * symbol) — and the 5-venue results union into one merge per interval.
-    * `fetch(chunk, exchange)` must return canonical candles already
-    * tagged with their `exchange` column (the normalizers in
+    * symbol) — and every interval's 5-venue results union into one merge
+    * per call. `fetch(chunk, exchange)` must return canonical candles
+    * already tagged with their `exchange` column (the normalizers in
     * [[graft.normalize.Exchanges]] do this).
     */
   def runFanOut(spark: SparkSession, chunks: Seq[Chunk], exchanges: Seq[String],
                 fetch: (Chunk, String) => DataFrame, lakePath: String,
                 ingestSeq: Long, dataType: String = "spot",
-                cutoffs: Map[(String, String), Long] = DefaultAvailabilityCutoffs): Unit = {
-    chunks.groupBy(_.interval).foreach { case (interval, ivChunks) =>
-      val frames = for {
-        c <- ivChunks
-        ex <- exchanges
-        (s, e) <- clampWindow(ex, c.symbol, c.startMs, c.endMs, cutoffs)
-      } yield fetch(c.copy(startMs = s, endMs = e), ex)
-      if (frames.nonEmpty) {
-        val tagged = MergeWriter.withPartitionCols(
-          frames.reduce(_ unionByName _), interval, dataType)
-        MergeWriter.merge(spark, tagged, lakePath, ingestSeq)
-      }
-    }
-  }
+                cutoffs: Map[(String, String), Long] = DefaultAvailabilityCutoffs): Unit =
+    mergeOnce(spark, for {
+      c <- chunks
+      ex <- exchanges
+      (s, e) <- clampWindow(ex, c.symbol, c.startMs, c.endMs, cutoffs)
+    } yield MergeWriter.withPartitionCols(
+      fetch(c.copy(startMs = s, endMs = e), ex), c.interval, dataType),
+      lakePath, ingestSeq)
 }

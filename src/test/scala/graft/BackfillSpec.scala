@@ -1,8 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.lake.{ManifestLake, MergeWriter}
 import graft.normalize.Exchanges
 import graft.streaming.Backfill
 
@@ -53,7 +59,7 @@ class BackfillSpec extends SparkSpec {
     assert(c0.getAs[String]("exchange") == "coinbase")
   }
 
-  test("multi-interval plan merges each interval separately") {
+  test("multi-interval plan lands every interval in one merge") {
     val lake = Files.createTempDirectory("graft_backfill2").toString + "/lake"
     val chunks = Backfill.plan(Seq("BTC-USDT"), Seq("1h", "1d"), T0, T0 + 86400000L)
     Backfill.run(spark, chunks, fixtureFetch, lake, ingestSeq = 1)
@@ -146,5 +152,118 @@ class BackfillSpec extends SparkSpec {
     val minBinance = out.filter($"exchange" === "binanceus")
       .select(min(unix_micros($"timestamp") / 1000)).as[Double].collect()(0).toLong
     assert(minBinance == cut)
+  }
+
+  /** Write commands (`InsertIntoHadoopFsRelationCommand`) into `lake` run
+    * inside `body`; the path filter ignores late events of earlier writes.
+    */
+  private def writeCommands(lake: String)(body: => Unit): Int = {
+    val n = new AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical match {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.toUri.getPath.startsWith(lake) => n.incrementAndGet()
+          case _ => ()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; Thread.sleep(1500) /* drain the async listener bus */ }
+    finally spark.listenerManager.unregister(listener)
+    n.get()
+  }
+
+  /** `canonFetch` with prices that depend on the fetch's revision. */
+  private def revFetch(rev: Int)(c: Backfill.Chunk, ex: String): DataFrame =
+    canonFetch(c, ex).withColumn("close", lit(1.5 + rev))
+
+  private def sortedLake(path: String): Seq[org.apache.spark.sql.Row] = {
+    val df = MergeWriter.readLake(spark, path)
+    val cols = df.columns.sorted
+    df.select(cols.map(col).toIndexedSeq: _*).orderBy(cols.map(col).toIndexedSeq: _*)
+      .collect().toSeq
+  }
+
+  Seq("lock", "manifest").foreach { protocol =>
+    test(s"fan-out is one write per call and equals per-interval merges ($protocol path)") {
+      val root = Files.createTempDirectory("graft_fanout_once").toString
+      val exchanges = Seq("coinbase", "binanceus")
+      val intervals = Seq("1h", "1d")
+      val horizon = Backfill.plan(Seq("BTC-USDT", "ETH-USDT"), intervals, T0, T0 + 2 * DayMs)
+      // the newest day re-fetched with revisions, then the first day again
+      // at a LOWER seq: the later call must lose wherever they overlap
+      val calls = Seq(
+        (horizon, 0, 2L),
+        (Backfill.plan(Seq("BTC-USDT", "ETH-USDT"), intervals, T0 + DayMs, T0 + 2 * DayMs), 1, 3L),
+        (Backfill.plan(Seq("BTC-USDT"), intervals, T0, T0 + DayMs), 2, 1L))
+      // reference lake: one merge per interval group
+      def perInterval(lake: String, chunks: Seq[Backfill.Chunk], rev: Int, seq: Long): Unit =
+        chunks.groupBy(_.interval).foreach { case (iv, cs) =>
+          val frames = for (c <- cs; ex <- exchanges) yield revFetch(rev)(c, ex)
+          MergeWriter.merge(spark,
+            MergeWriter.withPartitionCols(frames.reduce(_ unionByName _), iv, "spot"), lake, seq)
+        }
+      if (protocol == "manifest") spark.conf.set("spark.graft.lake.commit", "manifest")
+      try {
+        val once = s"$root/once"
+        val reference = s"$root/reference"
+        calls.foreach { case (chunks, rev, seq) =>
+          val writes = writeCommands(once)(
+            Backfill.runFanOut(spark, chunks, exchanges, revFetch(rev), once, ingestSeq = seq))
+          assert(writes == 1, s"runFanOut at seq $seq ran $writes write commands")
+          perInterval(reference, chunks, rev, seq)
+        }
+        assert(ManifestLake.isManifestLake(spark, once) == (protocol == "manifest"))
+        val got = sortedLake(once)
+        assert(got.size == 2 * 2 * 2 * 48, "symbols × exchanges × intervals × hours")
+        assert(got == sortedLake(reference))
+        val seqs = MergeWriter.readLake(spark, once).groupBy($"date").agg(max($"ingest_seq"))
+          .as[(String, Long)].collect().toMap
+        assert(seqs == Map("20210101" -> 2L, "20210102" -> 3L))
+      } finally spark.conf.unset("spark.graft.lake.commit")
+    }
+  }
+
+  /** One exchange's response body for hourly candles over `c`'s window. */
+  private def payload(ex: String, c: Backfill.Chunk): String = {
+    def q(v: Any) = "\"" + v + "\""
+    val ts = c.startMs until c.endMs by HourMs
+    ex match {
+      case "coinbase" => ts.map(t => s"[${t / 1000},1.0,2.0,1.5,1.6,42.0]").mkString("[", ",", "]")
+      case "bitstamp" => ts.map(t => s"""{"timestamp":${q(t / 1000)},"open":"1.5",""" +
+          """"high":"2.0","low":"1.0","close":"1.6","volume":"42.0"}""")
+        .mkString("""{"data":{"ohlc":[""", ",", "]}}")
+      case "bitfinex" => ts.map(t => s"[$t,1.5,1.6,2.0,1.0,42.0]").mkString("[", ",", "]")
+      case "kucoin" => ts.map(t => Seq(t / 1000, "1.5", "1.6", "2.0", "1.0", "42.0", 0).map(q)
+          .mkString("[", ",", "]")).mkString("""{"code":"200000","data":[""", ",", "]}")
+      case "binanceus" => ts.map(t => s"""[$t,"1.5","2.0","1.0","1.6","42.0",${t + 59999},""" +
+          """"0",1,"0","0","0"]""").mkString("[", ",", "]")
+    }
+  }
+
+  test("a wide fan-out compiles its union branches once per normalizer, then never again") {
+    val root = Files.createTempDirectory("graft_fanout_codegen").toString
+    val exchanges = Seq("coinbase", "bitstamp", "bitfinex", "kucoin", "binanceus")
+    // six symbols, the width of the reference's matrix: 150 union branches
+    val chunks = Backfill.plan(
+      Seq("BTC-USDT", "ETH-USDT", "SOL-USDT", "XRP-USDT", "ADA-USDT", "DOGE-USDT"),
+      graft.normalize.Intervals.All, T0, T0 + DayMs)
+    def fetch(c: Backfill.Chunk, ex: String): DataFrame =
+      Exchanges.all(ex)(Seq((payload(ex, c), c.symbol)).toDF("payload", "symbol"))
+    def compiles(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    // the same call twice, each into an empty lake like a benchmark pass
+    def call(lake: String): Long =
+      compiles(Backfill.runFanOut(spark, chunks, exchanges, fetch, lake, ingestSeq = 1))
+    val first = call(s"$root/first")
+    val second = call(s"$root/second")
+    info(s"compiles: first call $first, second call $second")
+    assert(second <= 5, s"the second call compiled $second classes")
+    assert(sortedLake(s"$root/second") == sortedLake(s"$root/first"))
+    assert(MergeWriter.readLake(spark, s"$root/second").count() == 6 * 5 * 5 * 24)
   }
 }

@@ -41,6 +41,8 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // mirror Session.build: same-shaped codegen stages share one class
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // mirror Session.build: catalog-table suites (Scale/Plan) must not
       // land ./spark-warehouse in the repo working tree; unique per run
       // so parallel sbt JVMs never share bucketed tables. Same scratch
