@@ -16,6 +16,11 @@ object Bench {
   @volatile private var warmRan = 0
   @volatile private var passesDone = 0
   private val passTotals = new java.util.concurrent.CopyOnWriteArrayList[java.lang.Double]()
+  // JVM-wide codegen compiles per query, the most of any timed pass: a
+  // warm query that still compiles misses Spark's codegen cache
+  private val compiles = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def record(name: String, dt: Double): Unit = {
     best.compute(name, (_, prev) =>
@@ -54,6 +59,10 @@ object Bench {
       (pts.size >= 2 || singlePassClean)
     val qs = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val perQueryCompiles = compiles.asScala.toSeq.sortBy(_._1)
+    val cs = perQueryCompiles.map { case (k, n) => s"\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
+    val compileTotal = perQueryCompiles.map(_._2.longValue).sum
     val failedJson = failedNames.take(5).map("\"" + _ + "\"").mkString("[", ",", "]")
     val slow = results.filter(_._2 >= 0).toSeq.sortBy(-_._2).take(20)
       .map { case (k, v) => f""""$k":$v%.2f""" }.mkString("{", ",", "}")
@@ -64,9 +73,10 @@ object Bench {
     // (observed: 2000 chars) and parses the LAST JSON object in it. So:
     // per-query detail first on its own line (fine if its head is
     // clipped), then a compact final line whose length is independent of
-    // query count (slowest-20 only).
+    // query count (slowest-20 only; compiles as one total).
     println(s"""{"metric":"queries","queries":$qs}""")
-    println(f"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_registered":${queries.size},"partial":$partial,"warm_runs":$warmRan,"timed_runs":$passesDone,"agg":"min","failed_count":${failedNames.size},"failed":$failedJson,"calib_s":$calibStart%.2f,"calib_end_s":$calibEnd%.2f,"pass_totals":$passJson,"degraded":$degraded,"authoritative":$authoritative,"outlier_count":${outliers.size},"outliers_x_steady":$outJson,"slowest":$slow,"sf":"$sfDir"}""")
+    println(s"""{"metric":"codegen_compiles","queries":$cs}""")
+    println(f"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_registered":${queries.size},"partial":$partial,"warm_runs":$warmRan,"timed_runs":$passesDone,"agg":"min","failed_count":${failedNames.size},"failed":$failedJson,"calib_s":$calibStart%.2f,"calib_end_s":$calibEnd%.2f,"pass_totals":$passJson,"degraded":$degraded,"authoritative":$authoritative,"outlier_count":${outliers.size},"outliers_x_steady":$outJson,"codegen_compiles":$compileTotal,"slowest":$slow,"sf":"$sfDir"}""")
     System.out.flush()
   }
 
@@ -158,10 +168,10 @@ object Bench {
     }
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
     def gcMs: Long = { var s = 0L; gcBeans.forEach(b => s += b.getCollectionTime); s }
-    // SPARK_GRAFT_BENCH_DEBUG=1 adds a per-query stderr line with GC and
-    // heap deltas — the fastest way to tell a plan regression from the
-    // environment's degraded page-fault mode (see build.sbt heap notes):
-    // the latter shows seconds of wall with ~zero GC.
+    // SPARK_GRAFT_BENCH_DEBUG=1 adds a per-query stderr line with GC,
+    // codegen-compile and heap deltas — the fastest way to tell a plan
+    // regression from the environment's degraded page-fault mode (see
+    // build.sbt heap notes): the latter shows seconds of wall with ~zero GC.
     val debug = sys.env.contains("SPARK_GRAFT_BENCH_DEBUG")
     // Even warmed, this guest's ambient page-fault noise can tax ONE
     // arbitrary query with a multi-second kernel-time stall (round-3
@@ -179,6 +189,7 @@ object Bench {
     val timedRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3).max(1)
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val g0 = gcMs
+      val c0 = compileCount
       val t0 = System.nanoTime()
       // noop-format write executes the FULL plan including final sorts;
       // `.count()` would let Catalyst eliminate each query's ORDER BY
@@ -192,13 +203,15 @@ object Bench {
       // a failed query must not masquerade as a fast one
       val dt = if (failed) -1.0 else (System.nanoTime() - t0) / 1e9
       record(name, dt)
+      val compiled = compileCount - c0
+      compiles.merge(name, compiled, (a, b) => math.max(a.longValue, b.longValue))
       dropCheckpoints()
       if (debug) {
         val rt = Runtime.getRuntime
         val usedMb = (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
         val storMb = spark.sparkContext.getExecutorMemoryStatus.values
           .map { case (max, free) => (max - free) / (1024 * 1024) }.sum
-        System.err.println(f"[benchdbg] $name%-24s t=$dt%7.2fs gc=${gcMs - g0}%5dms heap=${usedMb}MB storage=${storMb}MB")
+        System.err.println(f"[benchdbg] $name%-24s t=$dt%7.2fs gc=${gcMs - g0}%5dms compiles=$compiled%4d heap=${usedMb}MB storage=${storMb}MB")
       }
       dt
     }

@@ -84,6 +84,16 @@ object Session {
       // BackfillSpec) compiled 322 classes on its first call and 322 again
       // on a repeat with ids in the names; without them, 32 and 0.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // The codegen cache is keyed on (thread context classloader, code).
+      // With artifact isolation on (Spark's default), the executor builds
+      // a new classloader per session UUID, and every streaming query
+      // runs on a cloned session: each warm live catch-up launch
+      // recompiled every class its tasks use, and a perpetual loop kept
+      // one classloader per launch. The engine adds no session artifacts
+      // and runs no Spark Connect, so every session shares the executor's
+      // default classloader. Traced ingest benchmark (live, seed 41):
+      // 21.2 compiles per launch before, 0.4 after.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.driver.maxResultSize", "4g")
       // bucketed-table queries (q122) write through the session catalog;

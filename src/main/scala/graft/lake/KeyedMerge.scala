@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.operators.KeepLast
@@ -12,8 +12,8 @@ import graft.operators.KeepLast
   * partition key. The protocols differ only in how they read the
   * touched partitions' existing rows and how they publish the result:
   *
-  *  - lock path ([[MergeWriter.mergeKeyed]]): a static partition
-  *    predicate over the live directories plus a lineage cut, then a
+  *  - lock path ([[MergeWriter.mergeKeyed]]): a read of the touched
+  *    partition directories plus a lineage cut, then a
   *    dynamic-partition overwrite under the single-writer lock;
   *  - manifest path ([[ManifestLake.mergeKeyed]]): the committed
   *    manifest entries of the touched partitions, then a private txn
@@ -23,9 +23,9 @@ private[lake] object KeyedMerge {
 
   /** One merge up to its commit: the evolved table `schema`, the
     * `touched` partition-key values (one Seq per distinct combination,
-    * in `keys` order; empty when collection was skipped), the `deduped`
-    * relation (the merge's result) and `toWrite`, the same rows
-    * clustered by partition key.
+    * in `keys` order; empty when collection was skipped or the batch is
+    * empty), the `deduped` relation (the merge's result) and `toWrite`,
+    * the same rows clustered by partition key.
     */
   final case class Prepared(schema: StructType, touched: Seq[Seq[String]],
                             deduped: DataFrame, toWrite: DataFrame)
@@ -50,22 +50,7 @@ private[lake] object KeyedMerge {
       case Some(s) => evolveSchema(s, tagged.schema)
       case None    => StructType(tagged.schema.fields.map(_.copy(nullable = true)))
     }
-    // The touched key set is bounded by the batch's distinct partition-key
-    // combinations, so it collects to the driver. Null guard (round-10
-    // advice): a null key would write a __HIVE_DEFAULT_PARTITION__
-    // directory and never match its own partition on the next merge's
-    // read, silently dropping that partition's rows.
-    val touched =
-      if (!collectTouched) Seq.empty
-      else tagged.select(keys.map(col): _*).distinct().collect().toSeq.map { r =>
-        keys.indices.map { i =>
-          if (r.isNullAt(i)) throw new IllegalArgumentException(
-            s"keyed merge: batch contains a NULL value for partition key " +
-              s"'${keys(i)}' — partition keys must be non-null strings " +
-              "(derive them with date_format/lit before merging)")
-          r.getString(i)
-        }
-      }
+    val touched = if (collectTouched) touchedKeys(tagged, keys) else Seq.empty
     // allowMissingColumns both ways: the batch may ADD a column (existing
     // rows get null) or a caller may still send the old shape after the
     // lake evolved (batch rows get null). Dedup then applies whole-row
@@ -99,6 +84,30 @@ private[lake] object KeyedMerge {
     val toWrite =
       if (clusteredDedup) deduped else deduped.repartition(nWrite, keys.map(col): _*)
     Prepared(schema, touched, deduped, toWrite)
+  }
+
+  /** The batch's distinct partition-key combinations, bounded by the
+    * batch, so they collect to the driver. One job and no exchange: each
+    * task dedups its own partition and the driver unions the sets (a
+    * `distinct()` runs a shuffle map job plus a result job under AQE).
+    * Null guard (round-10 advice): a null key would write a
+    * __HIVE_DEFAULT_PARTITION__ directory and never match its own
+    * partition on the next merge's read, silently dropping that
+    * partition's rows.
+    */
+  private def touchedKeys(tagged: DataFrame, keys: Seq[String]): Seq[Seq[String]] = {
+    val keyRows = tagged.select(keys.map(col): _*)
+    keyRows.mapPartitions((rows: Iterator[Row]) => rows.toSet.iterator)(
+        Encoders.row(keyRows.schema))
+      .collect().toSeq.distinct.map { r =>
+        keys.indices.map { i =>
+          if (r.isNullAt(i)) throw new IllegalArgumentException(
+            s"keyed merge: batch contains a NULL value for partition key " +
+              s"'${keys(i)}' — partition keys must be non-null strings " +
+              "(derive them with date_format/lit before merging)")
+          r.getString(i)
+        }
+      }
   }
 
   /** Validate `batch` against the lake's tracked schema and return the

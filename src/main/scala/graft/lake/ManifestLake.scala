@@ -791,6 +791,8 @@ object ManifestLake {
       val rels = touched.map(relPath(keys, _)).toSet
       readEntriesGrouped(spark, path, manifest.view.filterKeys(rels).toMap)
     }
+    // an empty batch: no txn write, no commit, no sidecar publish
+    if (m.touched.isEmpty) return m.deduped
     // the evolved schema rides THIS commit's headers (atomic with the
     // CAS — round-14 advice: a sidecar publish decoupled from the commit
     // can lose a column to a content race); emitted only when it differs

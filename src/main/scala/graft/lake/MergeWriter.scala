@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Partitioned Parquet upsert sink — the reference's `save_to_parquet`
@@ -203,17 +204,17 @@ object MergeWriter {
     * re-delivered document is interchangeable,
     * [[graft.streaming.CorpusIngest.mergeDocs]]).
     *
-    * The affected read is pruned with ONE static partition predicate,
-    * `struct(keys) IN (touched combinations)`: Catalyst folds the literal
-    * list into an `InSet` that the scan evaluates per partition directory
-    * at PLANNING time (zero data files outside the touched partitions
-    * are opened). Its tree depth does not grow with the touched count; a
-    * left-deep OR of per-combination equalities overflows the default
-    * thread stack at ~400 combinations, which one backfill interval over
-    * 6 symbols × 5 exchanges × 14 days exceeds. A broadcast left-semi
-    * join on the partition keys is no substitute: dynamic partition
-    * pruning does not reliably fire for it, and the merge then reads the
-    * ENTIRE lake per batch (ScaleRehearsalSpec's merge-read rehearsal).
+    * The affected read lists only the touched partition directories
+    * that exist (`basePath` = the lake root, so partition columns still
+    * come from the paths): its driver-side listing grows with the batch,
+    * not the lake, and zero data files outside the touched partitions
+    * are opened. Past `spark.sql.sources.parallelPartitionDiscovery.
+    * threshold` (32) paths, Spark lists them in one Spark job. A
+    * broadcast left-semi join on the partition keys is no substitute:
+    * dynamic partition pruning does not reliably fire for it, and the
+    * merge then reads the ENTIRE lake per batch (ScaleRehearsalSpec's
+    * merge-read rehearsal). An empty batch leaves the lake as it was,
+    * and an absent lake absent.
     *
     * Contract: `keys` columns in `tagged` are STRING-typed (both callers
     * derive them with date_format/lit), and `tagged` already carries the
@@ -242,31 +243,47 @@ object MergeWriter {
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLock(fs, path) {
       val stored = readStoredSchema(fs, path)
+      val lakeExisted = fs.exists(hPath)
       val m = KeyedMerge(spark, tagged, keys, dedupKeys, order, clusteredDedup,
-          stored, collectTouched = fs.exists(hPath)) { (schema, touched) =>
-        val touchedKeys = touched.map { vs =>
-          struct(keys.zip(vs).map { case (k, v) => lit(v).as(k) }: _*)
-        }
-        Some(spark.read.schema(schema).parquet(path)
-          .filter(struct(keys.map(col): _*).isin(touchedKeys: _*))
+          stored, collectTouched = lakeExisted) { (schema, touched) =>
+        val dirs = touched.map { vs =>
+          new org.apache.hadoop.fs.Path(hPath, keys.zip(vs).map { case (k, v) =>
+            ExternalCatalogUtils.getPartitionPathString(k, v) }.mkString("/"))
+        }.filter(fs.exists)
+        if (dirs.isEmpty) None
+        else Some(spark.read.schema(schema).option("basePath", path)
+          .parquet(dirs.map(_.toString): _*)
           // Materialize and cut lineage: Spark refuses to overwrite a
           // path its own read plan references. Affected partitions are
           // batch-sized, so executor-local checkpoint storage is bounded.
           .localCheckpoint())
       }
-      // Per-write option, NOT session conf: a session-global mutation
-      // here would leak dynamic-overwrite semantics to every concurrent
-      // writer sharing the session.
-      m.toWrite.write
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(keys: _*)
-        .parquet(path)
-      // advance the tracked schema only after the data write succeeded —
-      // a crash mid-write leaves the OLD sidecar, which still reads every
-      // surviving file correctly (by-name projection ignores extra
-      // columns in the partially-written files dynamic overwrite replaced)
-      publishStoredSchema(fs, path, stored, m.schema)
+      // An empty batch writes, commits and publishes nothing. On an
+      // existing lake the touched keys say so up front; on an absent
+      // lake the write itself is the only pass over the batch (a key
+      // pass there would decode a backfill's whole first batch twice),
+      // so a write that produced no partition directory removes the
+      // root it created.
+      if (!lakeExisted || m.touched.nonEmpty) {
+        // Per-write option, NOT session conf: a session-global mutation
+        // here would leak dynamic-overwrite semantics to every concurrent
+        // writer sharing the session.
+        m.toWrite.write
+          .mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(keys: _*)
+          .parquet(path)
+        if (!lakeExisted && !fs.listStatus(hPath).exists(_.isDirectory))
+          fs.delete(hPath, true)
+        else {
+          // advance the tracked schema only after the data write
+          // succeeded — a crash mid-write leaves the OLD sidecar, which
+          // still reads every surviving file correctly (by-name projection
+          // ignores extra columns in the partially-written files dynamic
+          // overwrite replaced)
+          publishStoredSchema(fs, path, stored, m.schema)
+        }
+      }
       m.deduped
     }
   }

@@ -90,7 +90,20 @@ object Backfill {
   private def mergeOnce(spark: SparkSession, tagged: Seq[DataFrame],
                         lakePath: String, ingestSeq: Long): Unit =
     if (tagged.nonEmpty)
-      MergeWriter.merge(spark, tagged.reduce(_ unionByName _), lakePath, ingestSeq)
+      MergeWriter.merge(spark, unionBalanced(tagged.toIndexedSeq), lakePath, ingestSeq)
+
+  /** Pairwise union fold. Each `unionByName` analyses the plan it builds,
+    * so a left-deep fold re-analyses a growing plan at every step
+    * (quadratic in the frame count); a balanced one analyses each frame
+    * log2(n) times. The optimizer's `CombineUnions` flattens both shapes
+    * to the same n-way union.
+    */
+  private def unionBalanced(frames: IndexedSeq[DataFrame]): DataFrame =
+    if (frames.size == 1) frames.head
+    else {
+      val (l, r) = frames.splitAt(frames.size / 2)
+      unionBalanced(l).unionByName(unionBalanced(r))
+    }
 
   /** Derivatives (perpetual futures) lifecycle — part of the reference's
     * declared contract, but EVERY venue returns empty

@@ -87,7 +87,7 @@ object CorpusIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) { mergeDocs(spark, batch, lakePath, batchId); () }
+        mergeDocs(spark, batch, lakePath, batchId) // an empty batch commits nothing
         postBatchHook(batchId)
       }
       .start()
@@ -148,7 +148,7 @@ object CorpusIngest {
             batch.select($"doc_id", $"text"), state)
           val survivors = batch.join(
             flags.filter($"survived").select($"doc_id"), Seq("doc_id"), "left_semi")
-          if (!survivors.isEmpty) { mergeDocs(spark, survivors, lakePath, batchId); () }
+          mergeDocs(spark, survivors, lakePath, batchId) // no survivor: no commit
           // batchId-keyed delta dirs: a redelivered batch OVERWRITES its
           // own delta instead of duplicating state
           delta.bands.write.mode("overwrite").parquet(s"$stateDir/bands/batch=$batchId")

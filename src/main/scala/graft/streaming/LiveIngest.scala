@@ -107,11 +107,12 @@ object LiveIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val withCols = MergeWriter.withPartitionCols(batch, interval, "spot")
-          MergeWriter.merge(spark, withCols, lakePath, batchId)
-          ()
-        }
+        // no emptiness pre-check (one more job per launch): an empty
+        // batch collects no touched keys, and the merge then writes and
+        // commits nothing
+        MergeWriter.merge(spark, MergeWriter.withPartitionCols(batch, interval, "spot"),
+          lakePath, batchId)
+        ()
       }
       .start()
   }

@@ -42,6 +42,21 @@ class MergeWriterSpec extends SparkSpec {
     assert(out(2).getAs[Double]("close") == 102.0)
   }
 
+  test("lock-path merge re-reads a partition whose value needs path escaping") {
+    // the affected read lists the touched directories by name: a value
+    // the writer escapes (symbol=BTC%2FUSD%3AT) must resolve to the same
+    // directory, or dynamic overwrite would drop the partition's old rows
+    val lake = tmpLake()
+    def batch(rows: (Long, Double)*) = MergeWriter.withPartitionCols(rows.map { case (ts, close) =>
+      Candle(new Timestamp(ts), 1.0, 2.0, 0.5, close, 10.0, "BTC/USD:T", "coinbase")
+    }.toDF(), "15m", "spot")
+    MergeWriter.merge(spark, batch((T0, 100.0), (T0 + 900000, 101.0)), lake, 1)
+    MergeWriter.merge(spark, batch((T0, 999.0), (T0 + 1800000, 102.0)), lake, 2)
+    val out = spark.read.parquet(lake).orderBy("timestamp").collect()
+    assert(out.map(_.getAs[Double]("close")).toSeq == Seq(999.0, 101.0, 102.0))
+    assert(out.forall(_.getAs[String]("symbol") == "BTC/USD:T"))
+  }
+
   test("merge is idempotent: re-ingesting the same batch changes nothing") {
     val lake = tmpLake()
     val b = MergeWriter.withPartitionCols(

@@ -14,8 +14,8 @@ import graft.streaming.SessionWindows
   */
 class SessionWindowSpec extends SparkSpec {
   import spark.implicits._
+  import SessionWindowSpec.Ev
 
-  private case class Ev(user_id: Long, ts: Timestamp)
   private val T0 = 1609459200000L
   private def ev(u: Long, offMin: Long, ms: Long = 0L) =
     Ev(u, new Timestamp(T0 + offMin * 60000L + ms))
@@ -70,4 +70,11 @@ class SessionWindowSpec extends SparkSpec {
     // u3's own session is still open (end 630 min > wm 600) → not emitted
     assert(!got.exists(_._1 == 3L), s"open session must not flush: $got")
   }
+}
+
+object SessionWindowSpec {
+  // Top-level in a companion, not nested in the suite: Janino cannot
+  // call the accessors of a case class nested inside a class instance,
+  // and the typed Datasets over it fall back to interpreted evaluation.
+  final case class Ev(user_id: Long, ts: Timestamp)
 }

@@ -43,6 +43,9 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       // mirror Session.build: same-shaped codegen stages share one class
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // mirror Session.build: every session, cloned streaming ones
+      // included, shares the executor's classloader and codegen cache
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // mirror Session.build: catalog-table suites (Scale/Plan) must not
       // land ./spark-warehouse in the repo working tree; unique per run
       // so parallel sbt JVMs never share bucketed tables. Same scratch

@@ -15,8 +15,8 @@ import graft.streaming.StreamJoin
   */
 class StreamJoinSpec extends SparkSpec {
   import spark.implicits._
+  import StreamJoinSpec.Ev
 
-  private case class Ev(user_id: Long, event_id: Long, ts: Timestamp)
   private val T0 = 1609459200000L
   private def ev(u: Long, id: Long, offMin: Long) =
     Ev(u, id, new Timestamp(T0 + offMin * 60000L))
@@ -107,4 +107,11 @@ class StreamJoinSpec extends SparkSpec {
     assert(out(1L) == 2L,
       s"expected in-horizon dups collapsed (1) + post-eviction re-emit (1): $out")
   }
+}
+
+object StreamJoinSpec {
+  // Top-level in a companion, not nested in the suite: Janino cannot
+  // call the accessors of a case class nested inside a class instance,
+  // and the typed Datasets over it fall back to interpreted evaluation.
+  final case class Ev(user_id: Long, event_id: Long, ts: Timestamp)
 }
