@@ -94,6 +94,16 @@ object Session {
       // default classloader. Traced ingest benchmark (live, seed 41):
       // 21.2 compiles per launch before, 0.4 after.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Without libhadoop, Hadoop's local filesystem forks `chmod` for
+      // every file, .crc file and directory it creates and `readlink`
+      // twice per FileContext rename (streaming checkpoint logs), at
+      // 2.6–3.7 ms a fork. An untraced 12-pass ingest benchmark backfill
+      // run forked 5,140 processes and a 20-launch live run 2,564 (920 of
+      // them serially on the stream thread); through the java.nio twins
+      // (lake.NioLocalFs), 4 and 31, none of them chmod or readlink.
+      // Checksums, .crc files and rename semantics are unchanged.
+      .config("spark.hadoop.fs.file.impl", classOf[lake.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[lake.NioLocalFs].getName)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.driver.maxResultSize", "4g")
       // bucketed-table queries (q122) write through the session catalog;

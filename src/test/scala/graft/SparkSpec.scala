@@ -46,6 +46,9 @@ object SparkSpec {
       // mirror Session.build: every session, cloned streaming ones
       // included, shares the executor's classloader and codegen cache
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // mirror Session.build: local file ops fork no chmod/readlink
+      .config("spark.hadoop.fs.file.impl", classOf[graft.lake.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.lake.NioLocalFs].getName)
       // mirror Session.build: catalog-table suites (Scale/Plan) must not
       // land ./spark-warehouse in the repo working tree; unique per run
       // so parallel sbt JVMs never share bucketed tables. Same scratch
