@@ -45,13 +45,12 @@ object Session {
     root
   }
 
-  def build(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors()))
-    val spark = SparkSession.builder()
-      .appName(appName)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+  /** The behaviour confs every graft session carries — the mains' and
+    * the test suites' alike; callers add master, parallelism and scratch
+    * directories.
+    */
+  private[graft] def configure(builder: SparkSession.Builder): SparkSession.Builder =
+    builder
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // testdata parquet is naive (isAdjustedToUTC=false); read it as
@@ -106,6 +105,14 @@ object Session {
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[lake.NioLocalFs].getName)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.driver.maxResultSize", "4g")
+
+  def build(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      String.valueOf(Runtime.getRuntime.availableProcessors()))
+    val spark = configure(SparkSession.builder())
+      .appName(appName)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       // bucketed-table queries (q122) write through the session catalog;
       // keep the warehouse out of the repo working tree and on the
       // scratch tier (see scratchRoot)

@@ -39,7 +39,4 @@ object Exact {
   /** DuckDB SQL fragment equivalent to [[dsum]] (alias it yourself). */
   def sqlDsum(expr: String): String =
     s"CAST(FLOOR(SUM(CAST($expr AS DECIMAL(38,10))) * 10000) AS DOUBLE) / 10000.0"
-
-  /** DuckDB SQL fragment equivalent to [[davg]]. */
-  def sqlDavg(expr: String): String = s"${sqlDsum(expr)} / COUNT(*)"
 }

@@ -77,18 +77,24 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * becomes a NO-OP commit instead of a duplicate version.
   *
   * Schema evolution matches the lock path's contract (both run
-  * [[KeyedMerge]]'s body): new nullable columns are accepted
-  * and tracked in the same `_graft_schema.json` sidecar; a TYPE change
-  * is rejected loudly BEFORE any data is written. Mixed-version reads
+  * [[KeyedMerge]]'s body): new nullable columns are accepted and a TYPE
+  * change is rejected loudly BEFORE any data is written. The schema of
+  * record lives in the log: a merge whose schema differs from the
+  * committed `#schema=` header commits the new one in its own headers
+  * (atomic with the CAS), and checkpoints re-carry it as `#schemaacc=`.
+  * A manifest merge writes no `_graft_schema.json` sidecar; that file
+  * is the lock path's record, read here only as the fallback for an
+  * imported lake before its first manifest merge. Mixed-version reads
   * align by name (`unionByName(allowMissingColumns)`).
   *
   * Scale: each merge reads only the touched partitions' directories
   * (batch-bounded) and writes one new txn directory plus one
   * batch-proportional delta manifest. Nothing scales with lake size.
   *
-  * Activation: set `spark.graft.lake.commit=manifest` for new lakes;
-  * an existing manifest lake self-describes by layout and is always
-  * written/read through this protocol regardless of the conf.
+  * Activation: the protocol is a property of the lake, read from its
+  * layout alone — a path with a `_manifest` directory is a manifest
+  * lake and every merge into it goes through this protocol. [[create]]
+  * makes a new one; [[importLockLake]] converts a lock-path lake.
   */
 object ManifestLake {
 
@@ -103,23 +109,9 @@ object ManifestLake {
     * the complete entry map and the accumulated tag/offset ledgers;
     * versions in between are deltas. Smaller = cheaper header lookups,
     * larger = cheaper commits; 10 bounds both at ≤ 10 small-file opens.
+    * Var so specs can exercise the cadence without 10 real commits.
     */
   @volatile private[graft] var checkpointInterval: Int = 10
-
-  /** Checkpoint cadence for this session: the
-    * `spark.graft.lake.checkpointInterval` conf (an int ≥ 1) when set,
-    * else [[checkpointInterval]] — the deployment knob for the
-    * commit-bytes vs ledger-walk-opens trade. Oversizing it degrades
-    * header lookups toward O(versions) until the next checkpoint;
-    * undersizing pays a full-map write per commit.
-    */
-  private def confCheckpointInterval(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.lake.checkpointInterval").map { v =>
-      val i = scala.util.Try(v.trim.toInt).getOrElse(-1)
-      require(i >= 1,
-        s"spark.graft.lake.checkpointInterval must be an integer >= 1, got '$v'")
-      i
-    }.getOrElse(checkpointInterval)
 
   /** The newest this-many commit tags survive in a checkpoint's
     * accumulated ledger — bounds checkpoint size under streaming
@@ -269,17 +261,6 @@ object ManifestLake {
       case ManifestName(v) => v.toLong
     }.sorted.reverse
     versions.find(v => resolveManifest(fs, path, v).isDefined).getOrElse(0L)
-  }
-
-  /** Highest pointer version CLAIMED (resolvable or not) — what a
-    * committer must not collide with; ≥ [[currentVersion]].
-    */
-  private def maxClaimedVersion(fs: FileSystem, path: String): Long = {
-    val dir = manifestDir(path)
-    if (!fs.exists(dir)) return 0L
-    fs.listStatus(dir).map(_.getPath.getName).collect {
-      case ManifestName(v) => v.toLong
-    }.foldLeft(0L)(math.max)
   }
 
   private def manifestText(fs: FileSystem, ref: MRef): String = {
@@ -440,11 +421,9 @@ object ManifestLake {
 
   /** The lake's tracked table schema with COMMIT-CAS authority: the
     * newest `#schema=`/`#schemaacc=` manifest header when present (a
-    * schema that is atomic with the version chain — no sidecar publish
-    * race can lose an evolved column from reads), else the
-    * `_graft_schema.json` sidecar (legacy lakes, lock-path imports).
-    * The sidecar remains as a best-effort cache/compat artifact; on
-    * manifest lakes the header is authoritative.
+    * schema that is atomic with the version chain), else the lock
+    * path's `_graft_schema.json` sidecar — the record of an imported
+    * lake until its first manifest merge moves the schema into the log.
     */
   private[lake] def trackedSchema(fs: FileSystem, path: String): Option[org.apache.spark.sql.types.StructType] = {
     val v = currentVersion(fs, path)
@@ -462,27 +441,12 @@ object ManifestLake {
   private def relPath(keys: Seq[String], values: Seq[String]): String =
     keys.zip(values).map { case (k, v) => s"$k=$v" }.mkString("/")
 
-  private def parseRel(rel: String): Seq[(String, String)] =
-    rel.split("/").toSeq.map { seg =>
-      val Array(k, v) = seg.split("=", 2)
-      (k, v)
-    }
-
   /** Absolute directory a txn's data lives under: `data/<txn>/` for
     * committed merge txns, the lake root for [[RootTxn]] (in-place
     * imported legacy partitions).
     */
   private[lake] def txnBase(path: String, txn: String): String =
     if (txn == RootTxn) path else s"$path/data/$txn"
-
-  /** Read one referenced partition directory, partition values attached
-    * as string literals from the manifest entry (no dir inference).
-    */
-  private def readPartition(spark: SparkSession, path: String,
-                            rel: String, txnDir: String): DataFrame = {
-    val df = spark.read.parquet(s"${txnBase(path, txnDir)}/$rel")
-    parseRel(rel).foldLeft(df) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
-  }
 
   /** Single-scan read of a set of manifest entries: ONE parquet relation
     * per live TXN directory (basePath-recovered partition columns), not
@@ -509,10 +473,10 @@ object ManifestLake {
     * [[FileStats]]'s skipping scans (whose groups are surviving FILE
     * paths rather than whole partition directories): one
     * basePath-recovered scan per txn, unioned by name across txns.
-    * When the lake has a tracked schema sidecar (every merge writes
-    * one) the read goes THROUGH it — partition columns keep their
-    * tracked type (STRING by the merge contract) and files that predate
-    * an evolved column surface it as null. The sidecar-less fallback
+    * When the lake has a tracked schema ([[trackedSchema]]: every merge
+    * records one) the read goes THROUGH it — partition columns keep
+    * their tracked type (STRING by the merge contract) and files that
+    * predate an evolved column surface it as null. The schema-less fallback
     * probes the schema through a CLONED session with partition-type
     * inference disabled (`spark.newSession()` isolates SQLConf — the
     * previous session-global conf flip could race a concurrent read in
@@ -575,7 +539,7 @@ object ManifestLake {
       val schema = trackedSchema(fs, path).getOrElse(
         throw new IllegalStateException(
           s"ManifestLake: empty committed state at $path and no tracked " +
-            "schema sidecar — nothing was ever merged"))
+            "schema — nothing was ever merged"))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
   }
@@ -596,8 +560,7 @@ object ManifestLake {
   private def commitManifest(fs: FileSystem, path: String, v: Long,
                              entries: Map[String, String],
                              headers: Seq[(String, String)],
-                             base: Option[Map[String, String]] = None,
-                             interval: Int = checkpointInterval): Unit = {
+                             base: Option[Map[String, String]] = None): Unit = {
     val target = v + 1
     // crashed-import guard (round-13 advice, medium): _manifest exists
     // but nothing is committed AND the root still carries legacy k=v
@@ -613,6 +576,7 @@ object ManifestLake {
             "at its root (a crashed importLockLake?) — re-run importLockLake " +
             "before merging, or this commit would orphan the legacy data")
     }
+    val interval = checkpointInterval
     val isFull = base.isEmpty || target == 1L ||
       (interval > 0 && target % interval == 0)
     val headerSb = new StringBuilder
@@ -767,12 +731,12 @@ object ManifestLake {
     }
     // The previous schema comes from the manifest HEADERS when present
     // (commit-CAS-authoritative; a concurrent writer's evolution is
-    // visible the moment its commit is), with the sidecar as the
-    // legacy/import fallback.
-    val prevSchema = hs.schema
+    // visible the moment its commit is), with the lock path's sidecar as
+    // the fallback for an imported lake's first manifest merge.
+    val headerSchema = hs.schema
       .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .orElse(MergeWriter.readStoredSchema(fs, path))
+    val prevSchema = headerSchema.orElse(MergeWriter.readStoredSchema(fs, path))
     val manifest = readManifest(fs, path, v)
     // No localCheckpoint on the affected read (round-15): unlike the
     // lock path (which must cut lineage because dynamic overwrite
@@ -791,14 +755,14 @@ object ManifestLake {
       val rels = touched.map(relPath(keys, _)).toSet
       readEntriesGrouped(spark, path, manifest.view.filterKeys(rels).toMap)
     }
-    // an empty batch: no txn write, no commit, no sidecar publish
+    // an empty batch: no txn write, no commit
     if (m.touched.isEmpty) return m.deduped
-    // the evolved schema rides THIS commit's headers (atomic with the
-    // CAS — round-14 advice: a sidecar publish decoupled from the commit
-    // can lose a column to a content race); emitted only when it differs
-    // from the previous tracked schema, so header bytes ∝ change
+    // the merged schema rides THIS commit's headers (atomic with the
+    // CAS) whenever it differs from the HEADER schema — so an evolving
+    // merge records its column, and an imported lake's first merge moves
+    // its sidecar schema into the log; header bytes ∝ change
     val schemaHeader =
-      if (!prevSchema.map(_.json).contains(m.schema.json))
+      if (!headerSchema.map(_.json).contains(m.schema.json))
         Seq("schema" -> enc(m.schema.json))
       else Nil
 
@@ -822,24 +786,7 @@ object ManifestLake {
       written.map(_ -> txnName).toMap
     commitManifest(fs, path, v, next,
       commitTag.map("tag" -> _).toSeq ++ schemaHeader ++ extraHeaders,
-      base = Some(manifest), interval = confCheckpointInterval(spark))
-    // The manifest header is the schema of record; the sidecar is a
-    // best-effort cache (legacy readers, lock-path compat), refreshed
-    // whenever its content differs — so a sidecar left stale by an
-    // earlier failed publish self-heals on the next merge. A sidecar
-    // failure AFTER the commit must not fail — or retry — the merge:
-    // the commit already landed, reads resolve the header schema, and
-    // re-running the merge would commit a duplicate version (round-14
-    // advice, medium: the retry wrapper could not distinguish a
-    // post-commit failure from a doomed attempt). An unreadable sidecar
-    // counts as differing, so it is rewritten too.
-    try MergeWriter.publishStoredSchema(fs, path,
-      scala.util.Try(MergeWriter.readStoredSchema(fs, path)).toOption.flatten, m.schema)
-    catch { case scala.util.control.NonFatal(e) =>
-      log.warn(s"ManifestLake: schema sidecar publish failed at $path AFTER " +
-        "a successful commit — the manifest header schema is authoritative, " +
-        "reads are unaffected; the next merge will refresh the sidecar", e)
-    }
+      base = Some(manifest))
     m.deduped
   }
 
@@ -886,10 +833,9 @@ object ManifestLake {
           // re-running is the correct response, exactly as for a clean
           // commit conflict. A failure with NO version advance is a
           // real error and rethrows. This classification cannot confuse
-          // OUR OWN successful commit for a concurrent writer's
-          // (round-14 advice, medium): mergeKeyed's only post-commit
-          // step — the best-effort sidecar refresh — no longer throws,
-          // so an exception reaching here always predates the commit.
+          // OUR OWN successful commit for a concurrent writer's: the
+          // commit is mergeKeyed's last step, so an exception reaching
+          // here always predates it.
           log.info(s"ManifestLake: merge attempt at $path failed while the " +
             s"version chain advanced (attempt $attempt/$maxAttempts, " +
             s"${e.getClass.getSimpleName}) — retrying against the new state")
@@ -986,8 +932,7 @@ object ManifestLake {
     beforeCommitHook()
     val written = leafPartitions(fs, new Path(txnDir), new Path(txnDir))
     val next = manifest -- touchedRels ++ written.map(_ -> txnName).toMap
-    commitManifest(fs, path, expectedVersion, next, headers,
-      base = Some(manifest), interval = confCheckpointInterval(spark))
+    commitManifest(fs, path, expectedVersion, next, headers, base = Some(manifest))
   }
 
   /** The current manifest's (relPath → txnDir) entries — bounded by
@@ -1020,15 +965,9 @@ object ManifestLake {
     val fs = fsFor(spark, path)
     val v = currentVersion(fs, path)
     val entries = readManifest(fs, path, v)
-    commitManifest(fs, path, v, entries, headers, base = Some(entries),
-      interval = confCheckpointInterval(spark))
+    commitManifest(fs, path, v, entries, headers, base = Some(entries))
     v + 1
   }
-
-  /** Read one committed partition by its manifest entry. */
-  private[lake] def readEntry(spark: SparkSession, path: String,
-                              rel: String, txnDir: String): DataFrame =
-    readPartition(spark, path, rel, txnDir)
 
   /** A txn directory name's version prefix (`txn-<v>-<token>` or legacy
     * `txn-<v>`); None for names outside the naming scheme.
@@ -1148,12 +1087,6 @@ object ManifestLake {
           if (fs.delete(new Path(root, rel), true)) removed += 1
         }
       }
-      // schema-sidecar publish temps orphaned by a crashed writer
-      fs.listStatus(root).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && n.startsWith("_graft_schema.json.") && n.endsWith(".tmp") &&
-          (now - st.getModificationTime) >= txnGraceMillis
-      }.foreach(st => if (fs.delete(st.getPath, false)) removed += 1)
       if (rootDirs.nonEmpty && rootRefs.isEmpty) {
         // nothing in-place survives: the @root sidecars describe only
         // reclaimed files — retire them with the tier
@@ -1209,6 +1142,23 @@ object ManifestLake {
     removed
   }
 
+  /** Make `path` a new, empty manifest lake: create its `_manifest`
+    * directory, so the lake routes through this protocol from its first
+    * merge on (which commits version 1). An absent or empty path is
+    * accepted; an existing manifest lake is left as it is. A path whose
+    * root holds `k=v` partition directories is a lock-path lake and is
+    * refused: converting it is [[importLockLake]]'s job.
+    */
+  def create(spark: SparkSession, path: String): Unit = {
+    val fs = fsFor(spark, path)
+    val root = new Path(path)
+    require(!fs.exists(root) || !fs.listStatus(root).exists(st =>
+        st.isDirectory && st.getPath.getName.contains("=")),
+      s"ManifestLake.create: $path holds partition directories — " +
+        "use importLockLake to convert a lock-path lake")
+    fs.mkdirs(manifestDir(path))
+  }
+
   /** Migrate an existing lock-path lake (plain dynamic-overwrite
     * partitioned parquet, [[MergeWriter]]) into version 1 of a manifest
     * lake IN ONE COMMIT — after which the whole table-format read side
@@ -1237,8 +1187,10 @@ object ManifestLake {
     * already moved is lost. Until version 1 is committed, any merge
     * routed here by the `_manifest` directory fails loud instead of
     * orphaning the legacy data (the crashed-import guard in
-    * [[commitManifest]]). The tracked `_graft_schema.json` sidecar is
-    * shared by both layouts in place.
+    * [[commitManifest]]). The lake's `_graft_schema.json` sidecar stays
+    * in place as its schema record until the first manifest merge,
+    * which commits that schema as a `#schema=` header; the manifest
+    * path never writes the sidecar.
     *
     * Cost: O(top-level partition dirs) directory listings + one
     * manifest write — independent of data volume.

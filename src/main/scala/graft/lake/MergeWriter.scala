@@ -47,10 +47,11 @@ object MergeWriter {
     * leaves a stale lock that must be removed by an operator (or
     * [[breakLock]]) — fail-stop beats silently-lost rows. (On S3-class
     * stores without atomic create the lock is advisory; those
-    * deployments should set `spark.graft.lake.commit=manifest` to use
-    * [[ManifestLake]]'s immutable-txn + atomic-manifest-create commit,
-    * where a torn merge is invisible to readers and the race shrinks
-    * to one conditional metadata PUT.)
+    * deployments should make their lakes with [[ManifestLake.create]]
+    * (or convert them with [[ManifestLake.importLockLake]]) to use its
+    * immutable-txn + atomic-manifest-create commit, where a torn merge
+    * is invisible to readers and the race shrinks to one conditional
+    * metadata PUT.)
     */
   private[lake] def withWriterLock[A](fs: org.apache.hadoop.fs.FileSystem,
                                       path: String)(body: => A): A = {
@@ -94,9 +95,10 @@ object MergeWriter {
   // current evolved schema; the merge validates each batch against it
   // (new nullable columns accepted, type changes REJECTED loudly),
   // reads existing data through it (parquet fills absent columns with
-  // null per file — by-name projection), and advances it atomically
-  // (tmp + rename) under the writer lock after a successful write that
-  // changed it.
+  // null per file — by-name projection), and advances it (tmp + rename)
+  // under the writer lock after a successful write that changed it.
+  // This sidecar is the LOCK path's schema record; a manifest lake keeps
+  // its schema in its commit headers (ManifestLake).
 
   private def schemaSidecar(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_schema.json")
@@ -122,46 +124,22 @@ object MergeWriter {
 
   /** Publish `schema` as the tracked sidecar unless `published` — the
     * sidecar content the caller read — already equals it: a merge that
-    * does not evolve the schema costs no create/delete/rename.
+    * does not evolve the schema costs no create/delete/rename. Called
+    * only under the writer lock, so no other publisher can interleave.
     */
-  private[lake] def publishStoredSchema(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                                        published: Option[org.apache.spark.sql.types.StructType],
-                                        schema: org.apache.spark.sql.types.StructType): Unit = {
+  private def publishStoredSchema(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                                  published: Option[org.apache.spark.sql.types.StructType],
+                                  schema: org.apache.spark.sql.types.StructType): Unit = {
     val json = schema.json
     if (published.map(_.json).contains(json)) return
     val target = schemaSidecar(path)
-    // writer-PRIVATE tmp: on the manifest path several optimistic
-    // writers can reach this concurrently (the lock path serializes, the
-    // manifest path orders only the COMMITS) — a shared tmp name let one
-    // writer rename the other's file away and fail a merge AFTER its
-    // commit had already landed
-    val tmp = new org.apache.hadoop.fs.Path(path,
-      s"_graft_schema.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val tmp = new org.apache.hadoop.fs.Path(path, "_graft_schema.json.tmp")
     val out = fs.create(tmp, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
-    // delete+rename publish, bounded-retried: two concurrent publishers
-    // can interleave delete/rename so one rename lands on an existing
-    // destination (refused on local FS). Readers that miss the sidecar
-    // inside the window fall back to inference-off schema probing rather
-    // than failing. If retries exhaust, equivalent content already
-    // published by the racer counts as success; a DIFFERENT surviving
-    // schema fails loud (swallowing it could drop an evolved column from
-    // every later read).
-    var attempt = 0
-    var done = false
-    while (!done && attempt < 5) {
-      fs.delete(target, false)
-      done = fs.rename(tmp, target)
-      attempt += 1
-      if (!done) Thread.sleep(10L)
-    }
-    if (!done) {
-      fs.delete(tmp, false)
-      if (!readStoredSchema(fs, path).map(_.json).contains(json))
-        throw new java.io.IOException(
-          s"MergeWriter: could not commit schema sidecar $target and the " +
-            "surviving sidecar differs — re-run the merge")
-    }
+    fs.delete(target, false)
+    if (!fs.rename(tmp, target))
+      throw new java.io.IOException(
+        s"MergeWriter: could not rename $tmp to the schema sidecar $target")
   }
 
   /** Read the lake through its tracked schema (mixed-schema partitions
@@ -225,16 +203,15 @@ object MergeWriter {
                                 order: Seq[org.apache.spark.sql.Column],
                                 commitTag: Option[String] = None,
                                 clusteredDedup: Boolean = false): DataFrame = {
-    // Object-store deployments opt into the manifest-pointer commit
-    // (`spark.graft.lake.commit=manifest`); an existing manifest lake
-    // self-describes by layout and must ALWAYS go through the protocol —
-    // a dynamic-overwrite write into it would bypass commit visibility.
-    // `commitTag` (a streaming sink's batchId) is recorded in the
-    // manifest commit so a redelivered batch no-ops; the lock path
-    // ignores it — there, redelivery idempotence comes from the keyed
-    // dedup absorbing identical rows.
-    if (ManifestLake.isManifestLake(spark, path) ||
-        spark.conf.getOption("spark.graft.lake.commit").contains("manifest"))
+    // The protocol is the lake's own: a manifest lake (made by
+    // ManifestLake.create or importLockLake) self-describes by layout and
+    // must ALWAYS go through its protocol — a dynamic-overwrite write
+    // into it would bypass commit visibility. `commitTag` (a streaming
+    // sink's batchId) is recorded in the manifest commit so a
+    // redelivered batch no-ops; the lock path ignores it — there,
+    // redelivery idempotence comes from the keyed dedup absorbing
+    // identical rows.
+    if (ManifestLake.isManifestLake(spark, path))
       return ManifestLake.mergeKeyed(spark, tagged, path, keys, dedupKeys, order,
         commitTag, clusteredDedup = clusteredDedup)
     // Scheme-aware existence check: java.io.File is silently false for

@@ -24,8 +24,6 @@ object Intervals {
     }
   }
 
-  def intervalSeconds(interval: String): Long = intervalMs(interval) / 1000
-
   /** Candles per day per interval (crypto_collector.py:484–490). */
   def candlesPerDay(interval: String): Int = (86400000L / intervalMs(interval)).toInt
 

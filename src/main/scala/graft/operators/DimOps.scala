@@ -938,7 +938,7 @@ object DimOps {
     * one relation: batch-1 rows surface the evolved column as NULL
     * (mixed-version txns align by name through the manifest), batch-2/3
     * rows carry their values, nothing is dropped or coerced, and the
-    * tracked sidecar advanced (the type-REJECT half lives in
+    * tracked header schema advanced (the type-REJECT half lives in
     * ManifestLakeSpec — a rejected batch can't be an oracle row).
     *
     * Scale: same merge posture as q175 (touched-partition reads, one

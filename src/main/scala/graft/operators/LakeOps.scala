@@ -531,8 +531,8 @@ object LakeOps {
     * ([[graft.lake.ManifestLake.importLockLake]], round-12 verdict item
     * 5): orders land in a PLAIN dynamic-overwrite lake (the lock path —
     * no manifest, no time travel), one import commit converts it to
-    * manifest version 1 with the data files renamed in place (never
-    * read or rewritten), and a post-import correction batch merges
+    * manifest version 1 with the data files referenced in place (never
+    * renamed, read or rewritten), and a post-import correction batch merges
     * through the SAME MergeWriter call — which now routes through the
     * commit protocol automatically because the lake self-describes by
     * layout. The output aggregates the imported v1 snapshot and the
@@ -541,7 +541,7 @@ object LakeOps {
     * pre-import content) and the imported lake is a first-class
     * manifest merge target.
     *
-    * Scale: the import is O(top-level partition dirs) renames + one
+    * Scale: the import is O(top-level partition dirs) listings + one
     * manifest write — a metadata transition, independent of data
     * volume; a 100 TB legacy lake gains the whole table-format read
     * side (snapshots, CDF, skipping, vacuum) without a byte copied.
@@ -564,12 +564,7 @@ object LakeOps {
         clusteredDedup = true) // bucket = o_orderkey % 8 — pure function
       ()
     }
-    // the legacy phase must take the LOCK path even if a previous query
-    // in this session left the manifest conf set
-    val saved = s.conf.getOption("spark.graft.lake.commit")
-    saved.foreach(_ => s.conf.unset("spark.graft.lake.commit"))
-    try merge(o.filter($"yr" <= 1997), 1L) // legacy dynamic-overwrite lake
-    finally saved.foreach(v => s.conf.set("spark.graft.lake.commit", v))
+    merge(o.filter($"yr" <= 1997), 1L) // legacy dynamic-overwrite lake
     require(!graft.lake.ManifestLake.isManifestLake(s, lake))
     graft.lake.ManifestLake.importLockLake(s, lake) // → manifest v1
     val corrections = o.filter($"yr" <= 1997 && $"o_orderkey" % 10 < 3)

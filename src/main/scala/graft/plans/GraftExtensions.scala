@@ -4,12 +4,13 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
-import graft.functions.{BloomContains, CollectCapped, CosineSim, FxpDot, MinHashSig, OrderedShingleHashes, PolyShingleHashes, ShingleHashes, SimHashSig, SortedIntersectCount, SortedTfMinSum, SrpBucket, TokenHashes, TokenTfEnc, WinnowFps}
+import graft.functions.{BloomContains, CollectCapped, CosineSim, FxpDot, MinHashSig, OrderedShingleHashes, PolyHash, PolyShingleHashes, ShingleHashes, SimHashSig, SortedIntersectCount, SortedTfMinSum, SrpBucket, TokenHashes, TokenTfEnc, WinnowFps, ZInterleave, ZInterleaveN}
 
 /** SparkSessionExtensions wiring for graft's custom Catalyst surface
-  * (currently one codegen'd expression; the injection point generalizes
-  * to optimizer `Rule`s / `SparkStrategy`s — SURVEY.md §4 concluded none
-  * are needed for reference parity, so none are injected).
+  * (the codegen'd expressions of `graft.functions` as SQL functions, one
+  * table below; the injection point generalizes to optimizer `Rule`s /
+  * `SparkStrategy`s — SURVEY.md §4 concluded none are needed for
+  * reference parity, so none are injected).
   *
   * Activate with `spark.sql.extensions=graft.plans.GraftExtensions`
   * ([[graft.Session.build]] does), or call [[GraftExtensions.register]]
@@ -22,171 +23,50 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private val cosineSimDescriptor = (
-    new FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-    (children: Seq[Expression]) => CosineSim(children(0), children(1)): Expression)
+  /** Argument `i` of `fn`, which must be an integer literal: these
+    * arguments shape generated loops or size aggregation buffers, so a
+    * runtime column makes no sense there. An absent argument takes
+    * `default`; without one it is an error too.
+    */
+  private def intArg(fn: String, name: String, default: Option[Int])
+                    (children: Seq[Expression], i: Int): Int =
+    children.lift(i) match {
+      case Some(Literal(v: Int, IntegerType)) => v
+      case None if default.isDefined => default.get
+      case arg => throw new IllegalArgumentException(
+        s"$fn: $name must be an integer literal, got ${if (default.isDefined) arg.get else arg}")
+    }
 
-  private val srpBucketDescriptor = (
-    new FunctionIdentifier("srp_bucket"),
-    new ExpressionInfo(classOf[SrpBucket].getName, "srp_bucket"),
-    (children: Seq[Expression]) => {
-      // plane count must be a compile-time literal: it shapes the
-      // generated loop, so a runtime column makes no sense here
-      val planes = children.lift(1) match {
-        case None => graft.operators.AnnLsh.DefaultPlanes
-        case Some(Literal(v: Int, IntegerType)) => v
-        case Some(other) => throw new IllegalArgumentException(
-          s"srp_bucket: planes must be an integer literal, got $other")
-      }
-      SrpBucket(children.head, planes): Expression
-    })
+  private def describe(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+    (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
-  private val minhashSigDescriptor = (
-    new FunctionIdentifier("minhash_sig"),
-    new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-    (children: Seq[Expression]) => {
-      // k must be a literal: it sizes the generated signature loop
-      val k = children.lift(1) match {
-        case None => graft.operators.MinHashLsh.K
-        case Some(Literal(v: Int, IntegerType)) => v
-        case Some(other) => throw new IllegalArgumentException(
-          s"minhash_sig: k must be an integer literal, got $other")
-      }
-      MinHashSig(children.head, k): Expression
-    })
-
-  private val simhashSigDescriptor = (
-    new FunctionIdentifier("simhash_sig"),
-    new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-    (children: Seq[Expression]) => SimHashSig(children.head): Expression)
-
-  private val shingleHashesDescriptor = (
-    new FunctionIdentifier("shingle_hashes"),
-    new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-    (children: Seq[Expression]) => {
-      val w = children.lift(1) match {
-        case None => 3
-        case Some(Literal(v: Int, IntegerType)) => v
-        case Some(other) => throw new IllegalArgumentException(
-          s"shingle_hashes: w must be an integer literal, got $other")
-      }
-      ShingleHashes(children.head, w): Expression
-    })
-
-  private val polyShingleHashesDescriptor = (
-    new FunctionIdentifier("poly_shingle_hashes"),
-    new ExpressionInfo(classOf[PolyShingleHashes].getName, "poly_shingle_hashes"),
-    (children: Seq[Expression]) => {
-      val w = children.lift(1) match {
-        case None => 3
-        case Some(Literal(v: Int, IntegerType)) => v
-        case Some(other) => throw new IllegalArgumentException(
-          s"poly_shingle_hashes: w must be an integer literal, got $other")
-      }
-      PolyShingleHashes(children.head, w): Expression
-    })
-
-  private val orderedShingleHashesDescriptor = (
-    new FunctionIdentifier("ordered_shingle_hashes"),
-    new ExpressionInfo(classOf[OrderedShingleHashes].getName, "ordered_shingle_hashes"),
-    (children: Seq[Expression]) => {
-      val w = children.lift(1) match {
-        case None => 3
-        case Some(Literal(v: Int, IntegerType)) => v
-        case Some(other) => throw new IllegalArgumentException(
-          s"ordered_shingle_hashes: w must be an integer literal, got $other")
-      }
-      OrderedShingleHashes(children.head, w): Expression
-    })
-
-  private val tokenHashesDescriptor = (
-    new FunctionIdentifier("token_hashes"),
-    new ExpressionInfo(classOf[TokenHashes].getName, "token_hashes"),
-    (children: Seq[Expression]) => TokenHashes(children.head): Expression)
-
-  private val fxpDotDescriptor = (
-    new FunctionIdentifier("fxp_dot"),
-    new ExpressionInfo(classOf[FxpDot].getName, "fxp_dot"),
-    (children: Seq[Expression]) => FxpDot(children.head, children(1)): Expression)
-
-  private val collectCappedDescriptor = (
-    new FunctionIdentifier("collect_capped"),
-    new ExpressionInfo(classOf[CollectCapped].getName, "collect_capped"),
-    (children: Seq[Expression]) => {
-      // the cap bounds the aggregation buffer, so it must be a plan-time
-      // literal, not a runtime column
-      val cap = children.lift(1) match {
-        case Some(Literal(v: Int, IntegerType)) => v
-        case other => throw new IllegalArgumentException(
-          s"collect_capped: cap must be an integer literal, got $other")
-      }
-      CollectCapped(children.head, cap): Expression
-    })
-
-  private val winnowFpsDescriptor = (
-    new FunctionIdentifier("winnow_fps"),
-    new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-    (children: Seq[Expression]) => {
-      // k and w shape the rolling-hash and deque loops: literals only
-      def litArg(idx: Int, default: Int, name: String): Int =
-        children.lift(idx) match {
-          case None => default
-          case Some(Literal(v: Int, IntegerType)) => v
-          case Some(other) => throw new IllegalArgumentException(
-            s"winnow_fps: $name must be an integer literal, got $other")
-        }
-      WinnowFps(children.head, litArg(1, 8, "k"), litArg(2, 4, "w")): Expression
-    })
-
-  private val bloomContainsDescriptor = (
-    new FunctionIdentifier("bloom_contains"),
-    new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-    (children: Seq[Expression]) => BloomContains(children.head, children(1)): Expression)
-
-  private val sortedIntersectCountDescriptor = (
-    new FunctionIdentifier("sorted_intersect_count"),
-    new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-    (children: Seq[Expression]) =>
-      SortedIntersectCount(children.head, children(1)): Expression)
-
-  private val tokenTfEncDescriptor = (
-    new FunctionIdentifier("token_tf_enc"),
-    new ExpressionInfo(classOf[TokenTfEnc].getName, "token_tf_enc"),
-    (children: Seq[Expression]) => TokenTfEnc(children.head): Expression)
-
-  private val sortedTfMinSumDescriptor = (
-    new FunctionIdentifier("sorted_tf_minsum"),
-    new ExpressionInfo(classOf[SortedTfMinSum].getName, "sorted_tf_minsum"),
-    (children: Seq[Expression]) =>
-      SortedTfMinSum(children.head, children(1)): Expression)
-
-  private val zInterleaveDescriptor = (
-    new FunctionIdentifier("z_interleave16"),
-    new ExpressionInfo(classOf[graft.functions.ZInterleave].getName, "z_interleave16"),
-    (children: Seq[Expression]) =>
-      graft.functions.ZInterleave(children(0), children(1)): Expression)
-
-  private val polyHashDescriptor = (
-    new FunctionIdentifier("poly_hash"),
-    new ExpressionInfo(classOf[graft.functions.PolyHash].getName, "poly_hash"),
-    (children: Seq[Expression]) =>
-      graft.functions.PolyHash(children.head): Expression)
-
-  private val zInterleaveNDescriptor = (
-    new FunctionIdentifier("z_interleave_n"),
-    new ExpressionInfo(classOf[graft.functions.ZInterleaveN].getName, "z_interleave_n"),
-    (children: Seq[Expression]) =>
-      graft.functions.ZInterleaveN(children): Expression)
-
-  private val descriptors =
-    Seq(cosineSimDescriptor, srpBucketDescriptor, minhashSigDescriptor,
-      simhashSigDescriptor, shingleHashesDescriptor, polyShingleHashesDescriptor,
-      orderedShingleHashesDescriptor,
-      tokenHashesDescriptor, fxpDotDescriptor, collectCappedDescriptor,
-      winnowFpsDescriptor, bloomContainsDescriptor, sortedIntersectCountDescriptor,
-      tokenTfEncDescriptor, sortedTfMinSumDescriptor, zInterleaveDescriptor,
-      polyHashDescriptor, zInterleaveNDescriptor)
+  private val descriptors = Seq(
+    describe("cosine_sim", classOf[CosineSim])(c => CosineSim(c(0), c(1))),
+    describe("srp_bucket", classOf[SrpBucket])(c => SrpBucket(c.head,
+      intArg("srp_bucket", "planes", Some(graft.operators.AnnLsh.DefaultPlanes))(c, 1))),
+    describe("minhash_sig", classOf[MinHashSig])(c => MinHashSig(c.head,
+      intArg("minhash_sig", "k", Some(graft.operators.MinHashLsh.K))(c, 1))),
+    describe("simhash_sig", classOf[SimHashSig])(c => SimHashSig(c.head)),
+    describe("shingle_hashes", classOf[ShingleHashes])(c => ShingleHashes(c.head,
+      intArg("shingle_hashes", "w", Some(3))(c, 1))),
+    describe("poly_shingle_hashes", classOf[PolyShingleHashes])(c => PolyShingleHashes(c.head,
+      intArg("poly_shingle_hashes", "w", Some(3))(c, 1))),
+    describe("ordered_shingle_hashes", classOf[OrderedShingleHashes])(c => OrderedShingleHashes(c.head,
+      intArg("ordered_shingle_hashes", "w", Some(3))(c, 1))),
+    describe("token_hashes", classOf[TokenHashes])(c => TokenHashes(c.head)),
+    describe("fxp_dot", classOf[FxpDot])(c => FxpDot(c.head, c(1))),
+    describe("collect_capped", classOf[CollectCapped])(c => CollectCapped(c.head,
+      intArg("collect_capped", "cap", None)(c, 1))),
+    describe("winnow_fps", classOf[WinnowFps])(c => WinnowFps(c.head,
+      intArg("winnow_fps", "k", Some(8))(c, 1), intArg("winnow_fps", "w", Some(4))(c, 2))),
+    describe("bloom_contains", classOf[BloomContains])(c => BloomContains(c.head, c(1))),
+    describe("sorted_intersect_count", classOf[SortedIntersectCount])(c =>
+      SortedIntersectCount(c.head, c(1))),
+    describe("token_tf_enc", classOf[TokenTfEnc])(c => TokenTfEnc(c.head)),
+    describe("sorted_tf_minsum", classOf[SortedTfMinSum])(c => SortedTfMinSum(c.head, c(1))),
+    describe("z_interleave16", classOf[ZInterleave])(c => ZInterleave(c(0), c(1))),
+    describe("poly_hash", classOf[PolyHash])(c => PolyHash(c.head)),
+    describe("z_interleave_n", classOf[ZInterleaveN])(c => ZInterleaveN(c)))
 
   /** Idempotently register graft functions on an already-built session. */
   def register(spark: SparkSession): Unit =

@@ -100,8 +100,7 @@ object LiveIngest {
     */
   def start(spark: SparkSession, candles: DataFrame, lakePath: String,
             checkpoint: String, interval: String,
-            trigger: Trigger = Trigger.ProcessingTime("15 minutes"),
-            watermarkDelay: String = "30 minutes"): StreamingQuery = {
+            trigger: Trigger = Trigger.ProcessingTime("15 minutes")): StreamingQuery = {
     candles
       .writeStream
       .option("checkpointLocation", checkpoint)

@@ -204,25 +204,39 @@ class BackfillSpec extends SparkSpec {
           MergeWriter.merge(spark,
             MergeWriter.withPartitionCols(frames.reduce(_ unionByName _), iv, "spot"), lake, seq)
         }
-      if (protocol == "manifest") spark.conf.set("spark.graft.lake.commit", "manifest")
-      try {
-        val once = s"$root/once"
-        val reference = s"$root/reference"
-        calls.foreach { case (chunks, rev, seq) =>
-          val writes = writeCommands(once)(
-            Backfill.runFanOut(spark, chunks, exchanges, revFetch(rev), once, ingestSeq = seq))
-          assert(writes == 1, s"runFanOut at seq $seq ran $writes write commands")
-          perInterval(reference, chunks, rev, seq)
-        }
-        assert(ManifestLake.isManifestLake(spark, once) == (protocol == "manifest"))
-        val got = sortedLake(once)
-        assert(got.size == 2 * 2 * 2 * 48, "symbols × exchanges × intervals × hours")
-        assert(got == sortedLake(reference))
-        val seqs = MergeWriter.readLake(spark, once).groupBy($"date").agg(max($"ingest_seq"))
-          .as[(String, Long)].collect().toMap
-        assert(seqs == Map("20210101" -> 2L, "20210102" -> 3L))
-      } finally spark.conf.unset("spark.graft.lake.commit")
+      val once = s"$root/once"
+      val reference = s"$root/reference"
+      if (protocol == "manifest") Seq(once, reference).foreach(ManifestLake.create(spark, _))
+      calls.foreach { case (chunks, rev, seq) =>
+        val writes = writeCommands(once)(
+          Backfill.runFanOut(spark, chunks, exchanges, revFetch(rev), once, ingestSeq = seq))
+        assert(writes == 1, s"runFanOut at seq $seq ran $writes write commands")
+        perInterval(reference, chunks, rev, seq)
+      }
+      assert(ManifestLake.isManifestLake(spark, once) == (protocol == "manifest"))
+      val got = sortedLake(once)
+      assert(got.size == 2 * 2 * 2 * 48, "symbols × exchanges × intervals × hours")
+      assert(got == sortedLake(reference))
+      val seqs = MergeWriter.readLake(spark, once).groupBy($"date").agg(max($"ingest_seq"))
+        .as[(String, Long)].collect().toMap
+      assert(seqs == Map("20210101" -> 2L, "20210102" -> 3L))
     }
+  }
+
+  test("a lake made by ManifestLake.create commits manifest versions; a fresh sibling stays on the lock path") {
+    val root = Files.createTempDirectory("graft_fanout_create").toString
+    val (manifest, plain) = (s"$root/manifest", s"$root/plain")
+    ManifestLake.create(spark, manifest)
+    val exchanges = Seq("coinbase", "binanceus")
+    val chunks = Backfill.plan(Seq("BTC-USDT"), Seq("1h"), T0, T0 + DayMs)
+    for (seq <- 1L to 2L; lake <- Seq(manifest, plain))
+      Backfill.runFanOut(spark, chunks, exchanges, revFetch(seq.toInt), lake, ingestSeq = seq)
+    assert(ManifestLake.latestVersion(spark, manifest) == 2L)
+    assert(ManifestLake.read(spark, manifest).filter($"close" =!= 3.5).isEmpty,
+      "the second pass must win on the manifest lake")
+    assert(!new java.io.File(s"$plain/_manifest").exists(),
+      "a lake the session did not create as a manifest lake takes the lock path")
+    assert(sortedLake(plain) == sortedLake(manifest))
   }
 
   /** One exchange's response body for hourly candles over `c`'s window. */

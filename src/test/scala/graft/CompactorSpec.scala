@@ -72,18 +72,16 @@ class CompactorSpec extends SparkSpec {
 
   test("only fragmented partitions rewrite; single-file partitions keep their file") {
     val lake = tmpLake()
-    spark.conf.set("spark.graft.lake.commit", "manifest")
-    try {
-      // day 1: single file; day 2: 3 files (the merge's one task rolls a
-      // new file every maxRecordsPerFile records)
-      MergeWriter.merge(spark, MergeWriter.withPartitionCols(
-        candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
-      spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
-      try MergeWriter.merge(spark, MergeWriter.withPartitionCols(
-        candles((0 until 6).map(i => (T0 + Day + i * 900000L, 200.0 + i, "coinbase")): _*),
-        "15m", "spot"), lake, 2)
-      finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    } finally spark.conf.unset("spark.graft.lake.commit")
+    ManifestLake.create(spark, lake)
+    // day 1: single file; day 2: 3 files (the merge's one task rolls a
+    // new file every maxRecordsPerFile records)
+    MergeWriter.merge(spark, MergeWriter.withPartitionCols(
+      candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+    try MergeWriter.merge(spark, MergeWriter.withPartitionCols(
+      candles((0 until 6).map(i => (T0 + Day + i * 900000L, 200.0 + i, "coinbase")): _*),
+      "15m", "spot"), lake, 2)
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     val day1Before = entryFiles(lake)("20210101/coinbase")
     assert(fileCounts(lake) == Map("20210101/coinbase" -> 1, "20210102/coinbase" -> 3))
 
@@ -109,39 +107,37 @@ class CompactorSpec extends SparkSpec {
   test("compactManifest: fragmented committed partitions collapse via one manifest commit; snapshots survive") {
     import graft.lake.ManifestLake
     val lake = tmpLake()
-    spark.conf.set("spark.graft.lake.commit", "manifest")
-    try {
-      // fragment the day's txn partition the way a LARGE merge does:
-      // the per-task writer rolls a new file every maxRecordsPerFile
-      // records (the merge itself clusters one task per partition key)
-      spark.conf.set("spark.sql.files.maxRecordsPerFile", "3")
-      try MergeWriter.merge(spark, MergeWriter.withPartitionCols(
-        candles((0 until 8).map(i => (T0 + i * 900000L, 100.0 + i, "coinbase")): _*),
-        "15m", "spot"), lake, 1)
-      finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-      val before = MergeWriter.readLake(spark, lake)
-        .orderBy("timestamp").collect().toSeq
-      val summary = Compactor.compactManifest(spark, lake).collect()
-      assert(summary.length == 1 && summary.head.getAs[Int]("files_before") >= 2,
-        s"expected one fragmented partition: ${summary.toSeq}")
-      // data byte-identical through the rewrite
-      val after = MergeWriter.readLake(spark, lake)
-        .orderBy("timestamp").collect().toSeq
-      assert(after == before, "compaction must not change the data")
-      // the rewritten partition is ONE file, referenced by a NEW version
-      val entries = ManifestLake.currentEntries(spark, lake)
-      val fs = new org.apache.hadoop.fs.Path(lake)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      entries.foreach { case (rel, txn) =>
-        val n = fs.listStatus(new org.apache.hadoop.fs.Path(s"$lake/data/$txn/$rel"))
-          .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        assert(n == 1, s"$rel still fragmented ($n files) after compaction")
-      }
-      // compaction is a COMMIT: the pre-compaction snapshot still serves
-      assert(ManifestLake.readAt(spark, lake, 1L).count() == 8)
-      // idempotence: a compacted lake is a no-op
-      assert(Compactor.compactManifest(spark, lake).isEmpty)
-    } finally spark.conf.unset("spark.graft.lake.commit")
+    ManifestLake.create(spark, lake)
+    // fragment the day's txn partition the way a LARGE merge does:
+    // the per-task writer rolls a new file every maxRecordsPerFile
+    // records (the merge itself clusters one task per partition key)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "3")
+    try MergeWriter.merge(spark, MergeWriter.withPartitionCols(
+      candles((0 until 8).map(i => (T0 + i * 900000L, 100.0 + i, "coinbase")): _*),
+      "15m", "spot"), lake, 1)
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    val before = MergeWriter.readLake(spark, lake)
+      .orderBy("timestamp").collect().toSeq
+    val summary = Compactor.compactManifest(spark, lake).collect()
+    assert(summary.length == 1 && summary.head.getAs[Int]("files_before") >= 2,
+      s"expected one fragmented partition: ${summary.toSeq}")
+    // data byte-identical through the rewrite
+    val after = MergeWriter.readLake(spark, lake)
+      .orderBy("timestamp").collect().toSeq
+    assert(after == before, "compaction must not change the data")
+    // the rewritten partition is ONE file, referenced by a NEW version
+    val entries = ManifestLake.currentEntries(spark, lake)
+    val fs = new org.apache.hadoop.fs.Path(lake)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    entries.foreach { case (rel, txn) =>
+      val n = fs.listStatus(new org.apache.hadoop.fs.Path(s"$lake/data/$txn/$rel"))
+        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      assert(n == 1, s"$rel still fragmented ($n files) after compaction")
+    }
+    // compaction is a COMMIT: the pre-compaction snapshot still serves
+    assert(ManifestLake.readAt(spark, lake, 1L).count() == 8)
+    // idempotence: a compacted lake is a no-op
+    assert(Compactor.compactManifest(spark, lake).isEmpty)
   }
 
   test("clusterManifest with a Morton sort key: FileStats prunes a 2-dim box on the real write path") {

@@ -191,41 +191,39 @@ class CorpusIngestSpec extends SparkSpec {
     import graft.lake.ManifestLake
     val mem = MemoryStream[Doc]
     val dir = Files.createTempDirectory("graft_corpus_crash_m").toString
-    spark.conf.set("spark.graft.lake.commit", "manifest")
-    try {
-      val boom = new java.util.concurrent.atomic.AtomicBoolean(true)
-      def pass(crash: Boolean): Option[Throwable] = {
-        val q = CorpusIngest.start(spark, mem.toDF(), s"$dir/lake", s"$dir/ckpt",
-          org.apache.spark.sql.streaming.Trigger.AvailableNow(), "1 minute", 0.1,
-          postBatchHook = _ =>
-            if (crash && boom.getAndSet(false))
-              throw new IllegalStateException("injected crash before epoch commit"))
-        try { q.awaitTermination(); None } catch { case e: Throwable => Some(e) }
-      }
-      def chain(t: Throwable): Seq[String] =
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
-          .map(c => Option(c.getMessage).getOrElse("")).toSeq
-      mem.addData(d(1, Good, T0), d(2, Good, T0 + 1000), // in-batch dup of 1
-        d(3, Good + " beta", T0 + 2000), d(4, Short, T0 + 3000))
-      val err = pass(crash = true)
-      assert(err.exists(e => chain(e).exists(_.contains("injected"))),
-        s"the injected crash must fail the query, got ${err.map(chain)}")
-      // the merge committed (tag included) before the crash
-      def versions(): Int = new java.io.File(s"$dir/lake/_manifest").listFiles()
-        .count(_.getName.matches("""m\d+\.txt"""))
-      assert(ManifestLake.isManifestLake(spark, s"$dir/lake"))
-      assert(versions() == 1)
-      // restart: batch 0 redelivers under the SAME batchId, then batch 1
-      mem.addData(d(5, Good, T0 + 60000), // cross-batch dup — exact tier catches it
-        d(6, Good + " gamma", T0 + 61000))
-      assert(pass(crash = false).isEmpty, "recovery pass must succeed")
-      val lake = ManifestLake.read(spark, s"$dir/lake")
-      assert(lake.select($"doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L, 6L),
-        "redelivered batch must converge: no dups, first-wins winners unchanged")
-      // exactly one version per DISTINCT batch: the redelivery no-op'd
-      assert(versions() == 2,
-        "redelivered batch minted a duplicate manifest version")
-    } finally spark.conf.unset("spark.graft.lake.commit")
+    ManifestLake.create(spark, s"$dir/lake")
+    val boom = new java.util.concurrent.atomic.AtomicBoolean(true)
+    def pass(crash: Boolean): Option[Throwable] = {
+      val q = CorpusIngest.start(spark, mem.toDF(), s"$dir/lake", s"$dir/ckpt",
+        org.apache.spark.sql.streaming.Trigger.AvailableNow(), "1 minute", 0.1,
+        postBatchHook = _ =>
+          if (crash && boom.getAndSet(false))
+            throw new IllegalStateException("injected crash before epoch commit"))
+      try { q.awaitTermination(); None } catch { case e: Throwable => Some(e) }
+    }
+    def chain(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10)
+        .map(c => Option(c.getMessage).getOrElse("")).toSeq
+    mem.addData(d(1, Good, T0), d(2, Good, T0 + 1000), // in-batch dup of 1
+      d(3, Good + " beta", T0 + 2000), d(4, Short, T0 + 3000))
+    val err = pass(crash = true)
+    assert(err.exists(e => chain(e).exists(_.contains("injected"))),
+      s"the injected crash must fail the query, got ${err.map(chain)}")
+    // the merge committed (tag included) before the crash
+    def versions(): Int = new java.io.File(s"$dir/lake/_manifest").listFiles()
+      .count(_.getName.matches("""m\d+\.txt"""))
+    assert(ManifestLake.isManifestLake(spark, s"$dir/lake"))
+    assert(versions() == 1)
+    // restart: batch 0 redelivers under the SAME batchId, then batch 1
+    mem.addData(d(5, Good, T0 + 60000), // cross-batch dup — exact tier catches it
+      d(6, Good + " gamma", T0 + 61000))
+    assert(pass(crash = false).isEmpty, "recovery pass must succeed")
+    val lake = ManifestLake.read(spark, s"$dir/lake")
+    assert(lake.select($"doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L, 6L),
+      "redelivered batch must converge: no dups, first-wins winners unchanged")
+    // exactly one version per DISTINCT batch: the redelivery no-op'd
+    assert(versions() == 2,
+      "redelivered batch minted a duplicate manifest version")
   }
 
   test("state is keyed by text hash, not doc_id: distinct texts all pass") {

@@ -124,48 +124,44 @@ class EraserSpec extends SparkSpec {
   test("manifest-lake erasure routes through a replacePartitions commit (no blind parquet read)") {
     import graft.lake.{ManifestLake, MergeWriter}
     val dir = java.nio.file.Files.createTempDirectory("graft_eraser_m").toString + "/lake"
-    spark.conf.set("spark.graft.lake.commit", "manifest")
-    try {
-      val rows = (1L to 40L).map(u => (u, s"p$u"))
-      val df = rows.toDF("user_id", "payload")
-        .withColumn("bucket", pmod(hash($"user_id"), lit(2)).cast("string"))
-        .withColumn("ingest_seq", lit(1L))
-      MergeWriter.mergeKeyed(spark, df, dir, Seq("bucket"),
-        Seq(col("bucket"), col("user_id")), Seq(col("ingest_seq")))
-      assert(ManifestLake.isManifestLake(spark, dir))
-      val stats = Eraser.eraseKeys(spark, dir, "user_id",
-        Seq(7L, 13L).toDF("user_id"), buckets = 2)
-        .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-      assert(stats.values.sum == 2L, s"2 users x 1 row must go: $stats")
-      // committed state: erased keys gone, survivors intact
-      val out = ManifestLake.read(spark, dir)
-      assert(out.filter($"user_id".isin(7L, 13L)).count() == 0)
-      assert(out.count() == 38)
-      // immutability: the PRE-erasure snapshot still holds the rows (the
-      // two-step every immutable-format DELETE has) until vacuum reclaims
-      assert(ManifestLake.readAt(spark, dir, 1L).count() == 40)
-      ManifestLake.vacuum(spark, dir)
-      val e = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, dir, 1L) }
-      assert(e.getMessage.contains("vacuumed"), e.getMessage)
-      assert(ManifestLake.read(spark, dir).count() == 38)
-    } finally spark.conf.unset("spark.graft.lake.commit")
+    ManifestLake.create(spark, dir)
+    val rows = (1L to 40L).map(u => (u, s"p$u"))
+    val df = rows.toDF("user_id", "payload")
+      .withColumn("bucket", pmod(hash($"user_id"), lit(2)).cast("string"))
+      .withColumn("ingest_seq", lit(1L))
+    MergeWriter.mergeKeyed(spark, df, dir, Seq("bucket"),
+      Seq(col("bucket"), col("user_id")), Seq(col("ingest_seq")))
+    assert(ManifestLake.isManifestLake(spark, dir))
+    val stats = Eraser.eraseKeys(spark, dir, "user_id",
+      Seq(7L, 13L).toDF("user_id"), buckets = 2)
+      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
+    assert(stats.values.sum == 2L, s"2 users x 1 row must go: $stats")
+    // committed state: erased keys gone, survivors intact
+    val out = ManifestLake.read(spark, dir)
+    assert(out.filter($"user_id".isin(7L, 13L)).count() == 0)
+    assert(out.count() == 38)
+    // immutability: the PRE-erasure snapshot still holds the rows (the
+    // two-step every immutable-format DELETE has) until vacuum reclaims
+    assert(ManifestLake.readAt(spark, dir, 1L).count() == 40)
+    ManifestLake.vacuum(spark, dir)
+    val e = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, dir, 1L) }
+    assert(e.getMessage.contains("vacuumed"), e.getMessage)
+    assert(ManifestLake.read(spark, dir).count() == 38)
   }
 
   test("manifest-lake erasure that empties a bucket drops it from the manifest") {
     import graft.lake.{ManifestLake, MergeWriter}
     val dir = java.nio.file.Files.createTempDirectory("graft_eraser_me").toString + "/lake"
-    spark.conf.set("spark.graft.lake.commit", "manifest")
-    try {
-      val df = (1L to 20L).map(u => (u, s"p$u")).toDF("user_id", "payload")
-        .withColumn("bucket", pmod(hash($"user_id"), lit(1)).cast("string"))
-        .withColumn("ingest_seq", lit(1L))
-      MergeWriter.mergeKeyed(spark, df, dir, Seq("bucket"),
-        Seq(col("bucket"), col("user_id")), Seq(col("ingest_seq")))
-      Eraser.eraseKeys(spark, dir, "user_id", (1L to 20L).toDF("user_id"), buckets = 1)
-      // current manifest references nothing; read of an empty committed
-      // state has no entries — currentEntries is the contract surface
-      val entries = ManifestLake.currentEntries(spark, dir)
-      assert(entries.isEmpty, s"fully-erased bucket must leave the manifest: $entries")
-    } finally spark.conf.unset("spark.graft.lake.commit")
+    ManifestLake.create(spark, dir)
+    val df = (1L to 20L).map(u => (u, s"p$u")).toDF("user_id", "payload")
+      .withColumn("bucket", pmod(hash($"user_id"), lit(1)).cast("string"))
+      .withColumn("ingest_seq", lit(1L))
+    MergeWriter.mergeKeyed(spark, df, dir, Seq("bucket"),
+      Seq(col("bucket"), col("user_id")), Seq(col("ingest_seq")))
+    Eraser.eraseKeys(spark, dir, "user_id", (1L to 20L).toDF("user_id"), buckets = 1)
+    // current manifest references nothing; read of an empty committed
+    // state has no entries — currentEntries is the contract surface
+    val entries = ManifestLake.currentEntries(spark, dir)
+    assert(entries.isEmpty, s"fully-erased bucket must leave the manifest: $entries")
   }
 }

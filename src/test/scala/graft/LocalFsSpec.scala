@@ -47,9 +47,8 @@ class LocalFsSpec extends SparkSpec {
       MergeWriter.withPartitionCols(candles(T0, 4, close).toDF(), "15m", "spot")
     val (lock, manifest) = (s"$dir/lock", s"$dir/manifest")
     MergeWriter.merge(spark, batch(100.0), lock, 0)
-    spark.conf.set("spark.graft.lake.commit", "manifest")
-    try MergeWriter.merge(spark, batch(100.0), manifest, 0)
-    finally spark.conf.unset("spark.graft.lake.commit")
+    ManifestLake.create(spark, manifest)
+    MergeWriter.merge(spark, batch(100.0), manifest, 0)
     assert(ManifestLake.isManifestLake(spark, manifest) && !ManifestLake.isManifestLake(spark, lock))
 
     val started = processStarts {

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.lake.{ManifestLake, MergeWriter}
 import graft.model.Candle
 
@@ -26,157 +27,156 @@ class ManifestLakeSpec extends SparkSpec {
   private def tmpLake(): String =
     Files.createTempDirectory("graft_mlake").toString + "/lake"
 
-  /** Run `body` with manifest commits enabled (conf is what NEW lakes
-    * key off; existing manifest lakes self-describe by layout).
+  /** A fresh lake made a manifest lake up front: the protocol is a
+    * property of the lake, read from its layout by every merge.
     */
-  private def withManifestMode[A](body: => A): A = {
-    spark.conf.set("spark.graft.lake.commit", "manifest")
-    try body finally spark.conf.unset("spark.graft.lake.commit")
+  private def manifestLake(): String = {
+    val lake = tmpLake()
+    ManifestLake.create(spark, lake)
+    lake
+  }
+
+  /** The schema of record a manifest lake's commit headers resolve to. */
+  private def headerSchema(lake: String): Option[StructType] = {
+    val fs = new org.apache.hadoop.fs.Path(lake)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ManifestLake.resolveHeaders(fs, lake, ManifestLake.latestVersion(spark, lake)).schema
+      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
   }
 
   test("merge semantics match the lock path: keep-last per key, idempotent, partition-isolated") {
-    withManifestMode {
-      val lake = tmpLake()
-      val b1 = MergeWriter.withPartitionCols(
-        candles((T0, 100.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot")
-      MergeWriter.merge(spark, b1, lake, 1)
-      // overlapping correction + an untouched sibling partition
-      val b2 = MergeWriter.withPartitionCols(candles((T0, 999.0, "coinbase")), "15m", "spot")
-      MergeWriter.merge(spark, b2, lake, 2)
-      val out = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect()
-      assert(out.length == 2)
-      assert(out(0).getAs[Double]("close") == 999.0, "last writer must win")
-      assert(out(1).getAs[Double]("close") == 200.0, "untouched partition intact")
-      // idempotence: re-delivering b2 changes nothing
-      MergeWriter.merge(spark, b2, lake, 3)
-      val again = MergeWriter.readLake(spark, lake).orderBy("timestamp")
-        .drop("ingest_seq").collect().toSeq
-      assert(again.map(_.getAs[Double]("close")) == Seq(999.0, 200.0))
-    }
+    val lake = manifestLake()
+    val b1 = MergeWriter.withPartitionCols(
+      candles((T0, 100.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot")
+    MergeWriter.merge(spark, b1, lake, 1)
+    // overlapping correction + an untouched sibling partition
+    val b2 = MergeWriter.withPartitionCols(candles((T0, 999.0, "coinbase")), "15m", "spot")
+    MergeWriter.merge(spark, b2, lake, 2)
+    val out = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect()
+    assert(out.length == 2)
+    assert(out(0).getAs[Double]("close") == 999.0, "last writer must win")
+    assert(out(1).getAs[Double]("close") == 200.0, "untouched partition intact")
+    // idempotence: re-delivering b2 changes nothing
+    MergeWriter.merge(spark, b2, lake, 3)
+    val again = MergeWriter.readLake(spark, lake).orderBy("timestamp")
+      .drop("ingest_seq").collect().toSeq
+    assert(again.map(_.getAs[Double]("close")) == Seq(999.0, 200.0))
   }
 
   test("a torn merge (crash between data write and manifest commit) is invisible to readers") {
-    withManifestMode {
-      val lake = tmpLake()
-      val b1 = MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot")
-      MergeWriter.merge(spark, b1, lake, 1)
-      val before = MergeWriter.readLake(spark, lake).drop("ingest_seq").collect().toSeq
-      // crash in the torn window
-      ManifestLake.beforeCommitHook = () => {
-        ManifestLake.beforeCommitHook = () => ()
-        throw new IllegalStateException("injected crash before manifest commit")
-      }
-      val b2 = MergeWriter.withPartitionCols(
-        candles((T0, 555.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot")
-      val e = intercept[IllegalStateException] { MergeWriter.merge(spark, b2, lake, 2) }
-      assert(e.getMessage.contains("injected"), e.getMessage)
-      // the torn txn's files exist on disk… (txn dirs carry a
-      // writer-private random token: txn-2-<token>)
-      val tornDirs = new java.io.File(s"$lake/data").listFiles()
-        .filter(_.getName.startsWith("txn-2-"))
-      assert(tornDirs.nonEmpty,
-        "test premise: the torn write must have landed data files")
-      // …but a reader sees EXACTLY the pre-merge state
-      assert(MergeWriter.readLake(spark, lake).drop("ingest_seq").collect().toSeq == before)
-      // the retry converges (reclaiming the orphaned txn dir)
-      MergeWriter.merge(spark, b2, lake, 2)
-      val out = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect()
-      assert(out.map(_.getAs[Double]("close")).toSeq == Seq(555.0, 200.0))
+    val lake = manifestLake()
+    val b1 = MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot")
+    MergeWriter.merge(spark, b1, lake, 1)
+    val before = MergeWriter.readLake(spark, lake).drop("ingest_seq").collect().toSeq
+    // crash in the torn window
+    ManifestLake.beforeCommitHook = () => {
+      ManifestLake.beforeCommitHook = () => ()
+      throw new IllegalStateException("injected crash before manifest commit")
     }
+    val b2 = MergeWriter.withPartitionCols(
+      candles((T0, 555.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot")
+    val e = intercept[IllegalStateException] { MergeWriter.merge(spark, b2, lake, 2) }
+    assert(e.getMessage.contains("injected"), e.getMessage)
+    // the torn txn's files exist on disk… (txn dirs carry a
+    // writer-private random token: txn-2-<token>)
+    val tornDirs = new java.io.File(s"$lake/data").listFiles()
+      .filter(_.getName.startsWith("txn-2-"))
+    assert(tornDirs.nonEmpty,
+      "test premise: the torn write must have landed data files")
+    // …but a reader sees EXACTLY the pre-merge state
+    assert(MergeWriter.readLake(spark, lake).drop("ingest_seq").collect().toSeq == before)
+    // the retry converges (reclaiming the orphaned txn dir)
+    MergeWriter.merge(spark, b2, lake, 2)
+    val out = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect()
+    assert(out.map(_.getAs[Double]("close")).toSeq == Seq(555.0, 200.0))
   }
 
   test("unreferenced data files are invisible: a stray txn directory never reaches readers") {
-    withManifestMode {
-      val lake = tmpLake()
-      val b1 = MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot")
-      MergeWriter.merge(spark, b1, lake, 1)
-      // an abandoned writer's orphan: full partition layout, never committed
-      candles((T0 + Day, 666.0, "coinbase")).toDF()
-        .withColumn("ingest_seq", lit(9L))
-        .write.parquet(s"$lake/data/txn-999/symbol=BTC-USDT/interval=15m/" +
-          "data_type=spot/exchange=coinbase/date=20210102")
-      val out = MergeWriter.readLake(spark, lake).collect()
-      assert(out.length == 1 && out(0).getAs[Double]("close") == 100.0,
-        "uncommitted files leaked into a read")
-    }
+    val lake = manifestLake()
+    val b1 = MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot")
+    MergeWriter.merge(spark, b1, lake, 1)
+    // an abandoned writer's orphan: full partition layout, never committed
+    candles((T0 + Day, 666.0, "coinbase")).toDF()
+      .withColumn("ingest_seq", lit(9L))
+      .write.parquet(s"$lake/data/txn-999/symbol=BTC-USDT/interval=15m/" +
+        "data_type=spot/exchange=coinbase/date=20210102")
+    val out = MergeWriter.readLake(spark, lake).collect()
+    assert(out.length == 1 && out(0).getAs[Double]("close") == 100.0,
+      "uncommitted files leaked into a read")
   }
 
   test("commit race: the losing writer fails loud with nothing corrupted") {
-    withManifestMode {
-      val lake = tmpLake()
-      val b1 = MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot")
-      MergeWriter.merge(spark, b1, lake, 1)
-      // a TRUE race: the competitor lands m2 AFTER this merge resolved
-      // the current version (v=1) but before its own commit — its entry
-      // keeps pointing at the txn dir m1 committed
-      val txn1 = new java.io.File(s"$lake/data").listFiles()
-        .map(_.getName).find(_.startsWith("txn-1-")).get
-      ManifestLake.beforeCommitHook = () => {
-        ManifestLake.beforeCommitHook = () => ()
-        val fs = new org.apache.hadoop.fs.Path(lake)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val race = fs.create(new org.apache.hadoop.fs.Path(s"$lake/_manifest/m2.txt"), false)
-        race.write(("symbol=BTC-USDT/interval=15m/data_type=spot/exchange=coinbase/" +
-          s"date=20210101\t$txn1\n").getBytes("UTF-8"))
-        race.close()
-      }
-      val b2 = MergeWriter.withPartitionCols(candles((T0, 555.0, "coinbase")), "15m", "spot")
-      val e = intercept[IllegalStateException] { MergeWriter.merge(spark, b2, lake, 2) }
-      assert(e.getMessage.contains("commit conflict"), e.getMessage)
-      // the loser's data write must not have disturbed the committed state
-      val out = MergeWriter.readLake(spark, lake).collect()
-      assert(out.length == 1 && out(0).getAs[Double]("close") == 100.0)
+    val lake = manifestLake()
+    val b1 = MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot")
+    MergeWriter.merge(spark, b1, lake, 1)
+    // a TRUE race: the competitor lands m2 AFTER this merge resolved
+    // the current version (v=1) but before its own commit — its entry
+    // keeps pointing at the txn dir m1 committed
+    val txn1 = new java.io.File(s"$lake/data").listFiles()
+      .map(_.getName).find(_.startsWith("txn-1-")).get
+    ManifestLake.beforeCommitHook = () => {
+      ManifestLake.beforeCommitHook = () => ()
+      val fs = new org.apache.hadoop.fs.Path(lake)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val race = fs.create(new org.apache.hadoop.fs.Path(s"$lake/_manifest/m2.txt"), false)
+      race.write(("symbol=BTC-USDT/interval=15m/data_type=spot/exchange=coinbase/" +
+        s"date=20210101\t$txn1\n").getBytes("UTF-8"))
+      race.close()
     }
+    val b2 = MergeWriter.withPartitionCols(candles((T0, 555.0, "coinbase")), "15m", "spot")
+    val e = intercept[IllegalStateException] { MergeWriter.merge(spark, b2, lake, 2) }
+    assert(e.getMessage.contains("commit conflict"), e.getMessage)
+    // the loser's data write must not have disturbed the committed state
+    val out = MergeWriter.readLake(spark, lake).collect()
+    assert(out.length == 1 && out(0).getAs[Double]("close") == 100.0)
   }
 
   test("vacuum reclaims superseded files and dead orphans; possibly-in-flight txns wait out the grace") {
-    withManifestMode {
-      val lake = tmpLake()
-      val b1 = MergeWriter.withPartitionCols(
-        candles((T0, 100.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot")
-      MergeWriter.merge(spark, b1, lake, 1)
-      // remap day1 twice (txn-2, txn-3); plant a DEAD orphan (version 2
-      // ≤ current 3: its target version is committed, the owning writer
-      // can only lose its CAS — reclaim immediately) and a
-      // FUTURE-versioned orphan (version 50 > current 3: could be an
-      // in-flight writer's private dir — reclaim only past the grace)
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 101.0, "coinbase")), "15m", "spot"), lake, 2)
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 102.0, "coinbase")), "15m", "spot"), lake, 3)
-      candles((T0, 7.0, "coinbase")).toDF().withColumn("ingest_seq", lit(9L))
-        .write.parquet(s"$lake/data/txn-2-deadbeef/symbol=BTC-USDT/interval=15m/" +
-          "data_type=spot/exchange=coinbase/date=20210101")
-      candles((T0, 7.0, "coinbase")).toDF().withColumn("ingest_seq", lit(9L))
-        .write.parquet(s"$lake/data/txn-50/symbol=BTC-USDT/interval=15m/" +
-          "data_type=spot/exchange=coinbase/date=20210101")
-      val before = MergeWriter.readLake(spark, lake).orderBy("timestamp")
-        .collect().map(_.getAs[Double]("close")).toSeq
-      assert(before == Seq(102.0, 200.0))
-      val removed = ManifestLake.vacuum(spark, lake)
-      assert(removed > 0, "vacuum must reclaim the superseded day1 copies + dead orphan")
-      // the ≤-current orphan is gone; the possibly-in-flight dir SURVIVES
-      // the default grace (deleting it would let a racing merge COMMIT a
-      // manifest referencing deleted files)
-      assert(!new java.io.File(s"$lake/data/txn-2-deadbeef").exists(),
-        "dead (≤ current) orphan must reclaim immediately")
-      assert(new java.io.File(s"$lake/data/txn-50").exists(),
-        "future-versioned txn dir may be in-flight — must survive the grace")
-      // a commit temp orphaned by a crash between content write and the
-      // publishing rename follows the same grace discipline
-      val orphanTmp = new java.io.File(s"$lake/_manifest/.m99.deadbeef.tmp")
-      java.nio.file.Files.write(orphanTmp.toPath, "torn".getBytes("UTF-8"))
-      ManifestLake.vacuum(spark, lake)
-      assert(orphanTmp.exists(), "a young commit temp may be a live writer's")
-      // …and everything reclaims once aged past the grace
-      ManifestLake.vacuum(spark, lake, txnGraceMillis = 0L)
-      assert(!new java.io.File(s"$lake/data/txn-50").exists(),
-        "aged-out future-versioned orphan must reclaim")
-      assert(!orphanTmp.exists(), "aged-out commit temp must reclaim")
-      val after = MergeWriter.readLake(spark, lake).orderBy("timestamp")
-        .collect().map(_.getAs[Double]("close")).toSeq
-      assert(after == before)
-    }
+    val lake = manifestLake()
+    val b1 = MergeWriter.withPartitionCols(
+      candles((T0, 100.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot")
+    MergeWriter.merge(spark, b1, lake, 1)
+    // remap day1 twice (txn-2, txn-3); plant a DEAD orphan (version 2
+    // ≤ current 3: its target version is committed, the owning writer
+    // can only lose its CAS — reclaim immediately) and a
+    // FUTURE-versioned orphan (version 50 > current 3: could be an
+    // in-flight writer's private dir — reclaim only past the grace)
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 101.0, "coinbase")), "15m", "spot"), lake, 2)
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 102.0, "coinbase")), "15m", "spot"), lake, 3)
+    candles((T0, 7.0, "coinbase")).toDF().withColumn("ingest_seq", lit(9L))
+      .write.parquet(s"$lake/data/txn-2-deadbeef/symbol=BTC-USDT/interval=15m/" +
+        "data_type=spot/exchange=coinbase/date=20210101")
+    candles((T0, 7.0, "coinbase")).toDF().withColumn("ingest_seq", lit(9L))
+      .write.parquet(s"$lake/data/txn-50/symbol=BTC-USDT/interval=15m/" +
+        "data_type=spot/exchange=coinbase/date=20210101")
+    val before = MergeWriter.readLake(spark, lake).orderBy("timestamp")
+      .collect().map(_.getAs[Double]("close")).toSeq
+    assert(before == Seq(102.0, 200.0))
+    val removed = ManifestLake.vacuum(spark, lake)
+    assert(removed > 0, "vacuum must reclaim the superseded day1 copies + dead orphan")
+    // the ≤-current orphan is gone; the possibly-in-flight dir SURVIVES
+    // the default grace (deleting it would let a racing merge COMMIT a
+    // manifest referencing deleted files)
+    assert(!new java.io.File(s"$lake/data/txn-2-deadbeef").exists(),
+      "dead (≤ current) orphan must reclaim immediately")
+    assert(new java.io.File(s"$lake/data/txn-50").exists(),
+      "future-versioned txn dir may be in-flight — must survive the grace")
+    // a commit temp orphaned by a crash between content write and the
+    // publishing rename follows the same grace discipline
+    val orphanTmp = new java.io.File(s"$lake/_manifest/.m99.deadbeef.tmp")
+    java.nio.file.Files.write(orphanTmp.toPath, "torn".getBytes("UTF-8"))
+    ManifestLake.vacuum(spark, lake)
+    assert(orphanTmp.exists(), "a young commit temp may be a live writer's")
+    // …and everything reclaims once aged past the grace
+    ManifestLake.vacuum(spark, lake, txnGraceMillis = 0L)
+    assert(!new java.io.File(s"$lake/data/txn-50").exists(),
+      "aged-out future-versioned orphan must reclaim")
+    assert(!orphanTmp.exists(), "aged-out commit temp must reclaim")
+    val after = MergeWriter.readLake(spark, lake).orderBy("timestamp")
+      .collect().map(_.getAs[Double]("close")).toSeq
+    assert(after == before)
   }
 
   test("vacuum x in-flight merge: a sweep inside the write-to-commit window cannot corrupt the commit") {
@@ -185,29 +185,27 @@ class ManifestLakeSpec extends SparkSpec {
     // after which the merge's CAS still succeeded, COMMITTING a manifest
     // that references deleted files. The version guard must leave the
     // in-flight dir alone; the commit must land and read back intact.
-    withManifestMode {
-      val lake = tmpLake()
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
-      // supersede day1 so the sweep has REAL garbage to reclaim
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 101.0, "coinbase")), "15m", "spot"), lake, 2)
-      var reclaimed = -1L
-      ManifestLake.beforeCommitHook = () => {
-        ManifestLake.beforeCommitHook = () => ()
-        // vacuum fires in the torn window: data written, manifest not yet
-        reclaimed = ManifestLake.vacuum(spark, lake)
-      }
-      val b = MergeWriter.withPartitionCols(
-        candles((T0, 555.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot")
-      MergeWriter.merge(spark, b, lake, 3) // must NOT throw
-      assert(reclaimed >= 1, "the sweep must still reclaim genuine garbage (superseded day1)")
-      // the committed manifest references intact files — full read works
-      val out = MergeWriter.readLake(spark, lake).orderBy("timestamp")
-        .collect().map(_.getAs[Double]("close")).toSeq
-      assert(out == Seq(555.0, 200.0),
-        s"commit after an in-window vacuum must reference intact files: $out")
+    val lake = manifestLake()
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
+    // supersede day1 so the sweep has REAL garbage to reclaim
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 101.0, "coinbase")), "15m", "spot"), lake, 2)
+    var reclaimed = -1L
+    ManifestLake.beforeCommitHook = () => {
+      ManifestLake.beforeCommitHook = () => ()
+      // vacuum fires in the torn window: data written, manifest not yet
+      reclaimed = ManifestLake.vacuum(spark, lake)
     }
+    val b = MergeWriter.withPartitionCols(
+      candles((T0, 555.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot")
+    MergeWriter.merge(spark, b, lake, 3) // must NOT throw
+    assert(reclaimed >= 1, "the sweep must still reclaim genuine garbage (superseded day1)")
+    // the committed manifest references intact files — full read works
+    val out = MergeWriter.readLake(spark, lake).orderBy("timestamp")
+      .collect().map(_.getAs[Double]("close")).toSeq
+    assert(out == Seq(555.0, 200.0),
+      s"commit after an in-window vacuum must reference intact files: $out")
   }
 
   test("rewrite x merge: a merge landing inside a clustering rewrite's snapshot-to-commit span fails the rewrite loud") {
@@ -244,52 +242,46 @@ class ManifestLakeSpec extends SparkSpec {
   }
 
   test("additive schema evolution flows through manifest txns (unionByName across versions)") {
-    withManifestMode {
-      val lake = tmpLake()
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
-      // month two grows vwap, touching only day2 — day1's txn never has it
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0 + Day, 200.0, "coinbase")), "15m", "spot")
-          .withColumn("vwap", lit(1.25)), lake, 2)
-      val out = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect()
-      assert(out.length == 2)
-      assert(out(0).isNullAt(out(0).fieldIndex("vwap")))
-      assert(out(1).getAs[Double]("vwap") == 1.25)
-    }
+    val lake = manifestLake()
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
+    // month two grows vwap, touching only day2 — day1's txn never has it
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0 + Day, 200.0, "coinbase")), "15m", "spot")
+        .withColumn("vwap", lit(1.25)), lake, 2)
+    val out = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect()
+    assert(out.length == 2)
+    assert(out(0).isNullAt(out(0).fieldIndex("vwap")))
+    assert(out(1).getAs[Double]("vwap") == 1.25)
   }
 
   test("partition values that need path escaping are rejected loudly") {
-    withManifestMode {
-      val lake = tmpLake()
-      val bad = MergeWriter.withPartitionCols(candles((T0, 100.0, "coin base")), "15m", "spot")
-      val e = intercept[IllegalArgumentException] { MergeWriter.merge(spark, bad, lake, 1) }
-      assert(e.getMessage.contains("escaping"), e.getMessage)
-    }
+    val lake = manifestLake()
+    val bad = MergeWriter.withPartitionCols(candles((T0, 100.0, "coin base")), "15m", "spot")
+    val e = intercept[IllegalArgumentException] { MergeWriter.merge(spark, bad, lake, 1) }
+    assert(e.getMessage.contains("escaping"), e.getMessage)
   }
 
   test("readAt time travel: a committed version is byte-stable under later merges (q175)") {
-    withManifestMode {
-      val lake = tmpLake()
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
-      val v1 = ManifestLake.readAt(spark, lake, 1L)
-        .select("timestamp", "close").as[(Timestamp, Double)].collect().toSet
-      // a later merge REWRITES the same partition (keep-last updates the
-      // T0 row) and adds a day — v1 must not move
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(
-          candles((T0, 150.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot"), lake, 2)
-      val v1Again = ManifestLake.readAt(spark, lake, 1L)
-        .select("timestamp", "close").as[(Timestamp, Double)].collect().toSet
-      assert(v1Again == v1, "v1 snapshot changed after a later merge")
-      assert(v1.map(_._2) == Set(100.0))
-      val v2 = ManifestLake.readAt(spark, lake, 2L)
-        .select($"close").as[Double].collect().toSet
-      assert(v2 == Set(150.0, 200.0), "current version must see the rewrite")
-      // read() is the highest committed version
-      assert(ManifestLake.read(spark, lake).count() == 2)
-    }
+    val lake = manifestLake()
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
+    val v1 = ManifestLake.readAt(spark, lake, 1L)
+      .select("timestamp", "close").as[(Timestamp, Double)].collect().toSet
+    // a later merge REWRITES the same partition (keep-last updates the
+    // T0 row) and adds a day — v1 must not move
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(
+        candles((T0, 150.0, "coinbase"), (T0 + Day, 200.0, "coinbase")), "15m", "spot"), lake, 2)
+    val v1Again = ManifestLake.readAt(spark, lake, 1L)
+      .select("timestamp", "close").as[(Timestamp, Double)].collect().toSet
+    assert(v1Again == v1, "v1 snapshot changed after a later merge")
+    assert(v1.map(_._2) == Set(100.0))
+    val v2 = ManifestLake.readAt(spark, lake, 2L)
+      .select($"close").as[Double].collect().toSet
+    assert(v2 == Set(150.0, 200.0), "current version must see the rewrite")
+    // read() is the highest committed version
+    assert(ManifestLake.read(spark, lake).count() == 2)
   }
 
   test("data-write race: a competing FULL merge in the loser's window cannot corrupt the winner") {
@@ -299,121 +291,112 @@ class ManifestLakeSpec extends SparkSpec {
     // make each writer's data private: B commits a whole merge inside
     // A's window; A must fail loud and the lake must hold EXACTLY B's
     // result, with A's data dir unreferenced garbage.
-    withManifestMode {
-      val lake = tmpLake()
+    val lake = manifestLake()
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
+    ManifestLake.beforeCommitHook = () => {
+      ManifestLake.beforeCommitHook = () => ()
+      // the competitor does a COMPLETE merge — data write AND commit —
+      // into the same partition, from the same resolved version
       MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
-      ManifestLake.beforeCommitHook = () => {
-        ManifestLake.beforeCommitHook = () => ()
-        // the competitor does a COMPLETE merge — data write AND commit —
-        // into the same partition, from the same resolved version
-        MergeWriter.merge(spark,
-          MergeWriter.withPartitionCols(candles((T0, 777.0, "coinbase")), "15m", "spot"), lake, 3)
-      }
-      val e = intercept[IllegalStateException] {
-        MergeWriter.merge(spark,
-          MergeWriter.withPartitionCols(candles((T0, 555.0, "coinbase")), "15m", "spot"), lake, 2)
-      }
-      assert(e.getMessage.contains("commit conflict"), e.getMessage)
-      val out = MergeWriter.readLake(spark, lake).collect()
-      assert(out.length == 1 && out(0).getAs[Double]("close") == 777.0,
-        "committed state must be exactly the winning writer's merge")
-      // the loser's retry now merges against B's state; seq 3 > 2 keeps B's row
+        MergeWriter.withPartitionCols(candles((T0, 777.0, "coinbase")), "15m", "spot"), lake, 3)
+    }
+    val e = intercept[IllegalStateException] {
       MergeWriter.merge(spark,
         MergeWriter.withPartitionCols(candles((T0, 555.0, "coinbase")), "15m", "spot"), lake, 2)
-      val retry = MergeWriter.readLake(spark, lake).collect()
-      assert(retry.length == 1 && retry(0).getAs[Double]("close") == 777.0,
-        "retry must dedup against the winner's state (higher seq wins)")
     }
+    assert(e.getMessage.contains("commit conflict"), e.getMessage)
+    val out = MergeWriter.readLake(spark, lake).collect()
+    assert(out.length == 1 && out(0).getAs[Double]("close") == 777.0,
+      "committed state must be exactly the winning writer's merge")
+    // the loser's retry now merges against B's state; seq 3 > 2 keeps B's row
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 555.0, "coinbase")), "15m", "spot"), lake, 2)
+    val retry = MergeWriter.readLake(spark, lake).collect()
+    assert(retry.length == 1 && retry(0).getAs[Double]("close") == 777.0,
+      "retry must dedup against the winner's state (higher seq wins)")
   }
 
   test("vacuum retention: a snapshot inside the horizon survives; one past it fails loud") {
-    withManifestMode {
-      val lake = tmpLake()
-      (1 to 3).foreach { i =>
-        MergeWriter.merge(spark,
-          MergeWriter.withPartitionCols(candles((T0, 100.0 + i, "coinbase")), "15m", "spot"),
-          lake, i.toLong)
-      }
-      val v2Before = ManifestLake.readAt(spark, lake, 2L)
-        .select($"close").as[Double].collect().toSet
-      ManifestLake.vacuum(spark, lake, retainVersions = 2)
-      // inside the horizon: still served, identical
-      assert(ManifestLake.readAt(spark, lake, 2L)
-        .select($"close").as[Double].collect().toSet == v2Before)
-      assert(ManifestLake.readAt(spark, lake, 3L)
-        .select($"close").as[Double].collect().toSet == Set(103.0))
-      // past it: loud, named failure — not a silent half-read
-      val e = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, lake, 1L) }
-      assert(e.getMessage.contains("vacuumed"), e.getMessage)
-      // default retention (current only) then reclaims v2
-      ManifestLake.vacuum(spark, lake)
-      val e2 = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, lake, 2L) }
-      assert(e2.getMessage.contains("vacuumed"), e2.getMessage)
-      assert(ManifestLake.read(spark, lake)
-        .select($"close").as[Double].collect().toSet == Set(103.0))
+    val lake = manifestLake()
+    (1 to 3).foreach { i =>
+      MergeWriter.merge(spark,
+        MergeWriter.withPartitionCols(candles((T0, 100.0 + i, "coinbase")), "15m", "spot"),
+        lake, i.toLong)
     }
+    val v2Before = ManifestLake.readAt(spark, lake, 2L)
+      .select($"close").as[Double].collect().toSet
+    ManifestLake.vacuum(spark, lake, retainVersions = 2)
+    // inside the horizon: still served, identical
+    assert(ManifestLake.readAt(spark, lake, 2L)
+      .select($"close").as[Double].collect().toSet == v2Before)
+    assert(ManifestLake.readAt(spark, lake, 3L)
+      .select($"close").as[Double].collect().toSet == Set(103.0))
+    // past it: loud, named failure — not a silent half-read
+    val e = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, lake, 1L) }
+    assert(e.getMessage.contains("vacuumed"), e.getMessage)
+    // default retention (current only) then reclaims v2
+    ManifestLake.vacuum(spark, lake)
+    val e2 = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, lake, 2L) }
+    assert(e2.getMessage.contains("vacuumed"), e2.getMessage)
+    assert(ManifestLake.read(spark, lake)
+      .select($"close").as[Double].collect().toSet == Set(103.0))
   }
 
   test("schema evolution through the manifest path: type change rejected BEFORE any write") {
-    withManifestMode {
-      val lake = tmpLake()
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
-      // tracked sidecar exists and matches the lock path's contract
-      assert(MergeWriter.storedSchema(spark, lake).exists(_.fieldNames.contains("close")))
-      val txnsBefore = new java.io.File(s"$lake/data").listFiles().length
-      val bad = MergeWriter.withPartitionCols(candles((T0 + Day, 1.0, "coinbase")), "15m", "spot")
-        .withColumn("close", lit("oops-string"))
-      val e = intercept[IllegalStateException] { MergeWriter.merge(spark, bad, lake, 2) }
-      assert(e.getMessage.contains("TYPE"), e.getMessage)
-      // rejected before the data write: no new txn dir, no new version
-      assert(new java.io.File(s"$lake/data").listFiles().length == txnsBefore,
-        "type-change reject must happen before any txn data lands")
-      assert(ManifestLake.read(spark, lake).count() == 1)
-    }
+    val lake = manifestLake()
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
+    // the schema of record is the commit header, not a sidecar
+    assert(headerSchema(lake).exists(_.fieldNames.contains("close")))
+    assert(!new java.io.File(s"$lake/_graft_schema.json").exists())
+    val txnsBefore = new java.io.File(s"$lake/data").listFiles().length
+    val bad = MergeWriter.withPartitionCols(candles((T0 + Day, 1.0, "coinbase")), "15m", "spot")
+      .withColumn("close", lit("oops-string"))
+    val e = intercept[IllegalStateException] { MergeWriter.merge(spark, bad, lake, 2) }
+    assert(e.getMessage.contains("TYPE"), e.getMessage)
+    // rejected before the data write: no new txn dir, no new version
+    assert(new java.io.File(s"$lake/data").listFiles().length == txnsBefore,
+      "type-change reject must happen before any txn data lands")
+    assert(ManifestLake.read(spark, lake).count() == 1)
   }
 
-  test("add-column merge advances the tracked sidecar; mixed-version read surfaces it as null") {
-    withManifestMode {
-      val lake = tmpLake()
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0 + Day, 200.0, "coinbase")), "15m", "spot")
-          .withColumn("vwap", lit(1.25)), lake, 2)
-      // the sidecar tracks the evolved schema (same contract as the lock path)
-      assert(MergeWriter.storedSchema(spark, lake).exists(_.fieldNames.contains("vwap")))
-      // and an OLD-shape writer is still accepted after evolution
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0 + 2 * Day, 300.0, "coinbase")), "15m", "spot"),
-        lake, 3)
-      val out = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect()
-      assert(out.length == 3)
-      assert(out(0).isNullAt(out(0).fieldIndex("vwap")))
-      assert(out(1).getAs[Double]("vwap") == 1.25)
-      assert(out(2).isNullAt(out(2).fieldIndex("vwap")))
-    }
+  test("add-column merge advances the tracked schema; mixed-version read shows null") {
+    val lake = manifestLake()
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0 + Day, 200.0, "coinbase")), "15m", "spot")
+        .withColumn("vwap", lit(1.25)), lake, 2)
+    // the commit header tracks the evolved schema
+    assert(headerSchema(lake).exists(_.fieldNames.contains("vwap")))
+    // and an OLD-shape writer is still accepted after evolution
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0 + 2 * Day, 300.0, "coinbase")), "15m", "spot"),
+      lake, 3)
+    val out = MergeWriter.readLake(spark, lake).orderBy("timestamp").collect()
+    assert(out.length == 3)
+    assert(out(0).isNullAt(out(0).fieldIndex("vwap")))
+    assert(out(1).getAs[Double]("vwap") == 1.25)
+    assert(out(2).isNullAt(out(2).fieldIndex("vwap")))
   }
 
   test("commit tags: a redelivered tagged merge is a no-op commit (exactly-once for streaming sinks)") {
-    withManifestMode {
-      val lake = tmpLake()
-      val docs = Seq((1L, "alpha text", "web", "20210101", "m1"))
-        .toDF("doc_id", "text", "source", "date", "text_md5")
-      graft.streaming.CorpusIngest.mergeDocs(spark, docs, lake, 7L)
-      val versions = new java.io.File(s"$lake/_manifest").listFiles().length
-      // at-least-once redelivery: same batchId → same tag → NO new version
-      graft.streaming.CorpusIngest.mergeDocs(spark, docs, lake, 7L)
-      assert(new java.io.File(s"$lake/_manifest").listFiles().length == versions,
-        "redelivered batch must be a no-op commit, not a duplicate version")
-      assert(ManifestLake.read(spark, lake).count() == 1)
-      // a NEW batch still commits normally
-      graft.streaming.CorpusIngest.mergeDocs(spark,
-        Seq((2L, "beta text", "web", "20210101", "m2"))
-          .toDF("doc_id", "text", "source", "date", "text_md5"), lake, 8L)
-      assert(ManifestLake.read(spark, lake).count() == 2)
-    }
+    val lake = manifestLake()
+    val docs = Seq((1L, "alpha text", "web", "20210101", "m1"))
+      .toDF("doc_id", "text", "source", "date", "text_md5")
+    graft.streaming.CorpusIngest.mergeDocs(spark, docs, lake, 7L)
+    val versions = new java.io.File(s"$lake/_manifest").listFiles().length
+    // at-least-once redelivery: same batchId → same tag → NO new version
+    graft.streaming.CorpusIngest.mergeDocs(spark, docs, lake, 7L)
+    assert(new java.io.File(s"$lake/_manifest").listFiles().length == versions,
+      "redelivered batch must be a no-op commit, not a duplicate version")
+    assert(ManifestLake.read(spark, lake).count() == 1)
+    // a NEW batch still commits normally
+    graft.streaming.CorpusIngest.mergeDocs(spark,
+      Seq((2L, "beta text", "web", "20210101", "m2"))
+        .toDF("doc_id", "text", "source", "date", "text_md5"), lake, 8L)
+    assert(ManifestLake.read(spark, lake).count() == 2)
   }
 
   test("mergeKeyedRetrying: the race loser re-resolves and folds the winner's rows in") {
@@ -556,15 +539,13 @@ class ManifestLakeSpec extends SparkSpec {
   }
 
   test("readAt rejects uncommitted versions loudly") {
-    withManifestMode {
-      val lake = tmpLake()
-      MergeWriter.merge(spark,
-        MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
-      val e = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, lake, 2L) }
-      assert(e.getMessage.contains("not committed"), e.getMessage)
-      val e0 = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, lake, 0L) }
-      assert(e0.getMessage.contains("not committed"), e0.getMessage)
-    }
+    val lake = manifestLake()
+    MergeWriter.merge(spark,
+      MergeWriter.withPartitionCols(candles((T0, 100.0, "coinbase")), "15m", "spot"), lake, 1)
+    val e = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, lake, 2L) }
+    assert(e.getMessage.contains("not committed"), e.getMessage)
+    val e0 = intercept[IllegalArgumentException] { ManifestLake.readAt(spark, lake, 0L) }
+    assert(e0.getMessage.contains("not committed"), e0.getMessage)
   }
 
   test("delta manifests: commits write changed entries only; checkpoints carry the full map + ledgers; chains survive vacuum") {
@@ -701,7 +682,7 @@ class ManifestLakeSpec extends SparkSpec {
     assert(ManifestLake.read(spark, lake).count() == 3L)
   }
 
-  test("checkpoint cadence is a session conf: spark.graft.lake.checkpointInterval") {
+  test("checkpoint cadence: every K-th version is a full manifest") {
     val lake = tmpLake()
     def merge(i: Int): Unit = {
       ManifestLake.mergeKeyed(spark,
@@ -709,7 +690,8 @@ class ManifestLakeSpec extends SparkSpec {
         lake, keys = Seq("part"), dedupKeys = Seq($"id"), order = Seq($"seq"))
       ()
     }
-    spark.conf.set("spark.graft.lake.checkpointInterval", "3")
+    val saved = ManifestLake.checkpointInterval
+    ManifestLake.checkpointInterval = 3
     try {
       (1 to 7).foreach(merge)
       val md = new java.io.File(s"$lake/_manifest")
@@ -724,14 +706,10 @@ class ManifestLakeSpec extends SparkSpec {
         "K=3 must checkpoint at v1 and every 3rd version")
       assert(ManifestLake.readAt(spark, lake, 5L).count() == 5L,
         "a mid-chain snapshot under the custom cadence resolves checkpoint+suffix")
-      // a malformed value fails loud, never silently defaults
-      spark.conf.set("spark.graft.lake.checkpointInterval", "zero")
-      val e = intercept[IllegalArgumentException] { merge(8) }
-      assert(e.getMessage.contains("checkpointInterval"), e.getMessage)
-    } finally spark.conf.unset("spark.graft.lake.checkpointInterval")
+    } finally ManifestLake.checkpointInterval = saved
     // back on the default cadence, commits keep working
-    merge(9)
-    assert(ManifestLake.read(spark, lake).count() == 8L) // ids 1..7 and 9
+    merge(8)
+    assert(ManifestLake.read(spark, lake).count() == 8L)
   }
 
   test("the tracked schema rides the commit CAS: reads survive a lost, stale, or corrupted sidecar") {
@@ -740,10 +718,12 @@ class ManifestLakeSpec extends SparkSpec {
     // a just-evolved column — and readGroupedPaths projects THROUGH the
     // tracked schema, silently dropping that column's data from reads.
     // The fix: an evolving merge commits a #schema= header atomic with
-    // its CAS, checkpoints re-carry it (#schemaacc=), and reads prefer
-    // the header over the sidecar. The sidecar is now a best-effort
-    // cache whose loss or corruption must not change any read.
-    spark.conf.set("spark.graft.lake.checkpointInterval", "2")
+    // its CAS, checkpoints re-carry it (#schemaacc=), reads prefer the
+    // header over the sidecar, and manifest merges no longer write one.
+    // A sidecar left beside a manifest lake — lost or stale — must not
+    // change any read.
+    val saved = ManifestLake.checkpointInterval
+    ManifestLake.checkpointInterval = 2
     try {
       val lake = tmpLake()
       ManifestLake.mergeKeyed(spark,
@@ -754,13 +734,11 @@ class ManifestLakeSpec extends SparkSpec {
         Seq((2L, 2.0, "a", 2L, "extra")).toDF("id", "v", "part", "seq", "w"),
         lake, keys = Seq("part"), dedupKeys = Seq($"id"), order = Seq($"seq"))
       val sidecar = new java.io.File(s"$lake/_graft_schema.json")
-      assert(sidecar.exists(), "test premise: the cache sidecar is written")
+      assert(!sidecar.exists(), "a manifest merge writes no sidecar")
       def readW(): Map[Long, String] =
         ManifestLake.read(spark, lake).select($"id", $"w")
           .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(readW() == Map(1L -> null, 2L -> "extra"))
-      // sidecar LOST: the header schema still surfaces the evolved column
-      assert(sidecar.delete())
+      // no sidecar: the header schema surfaces the evolved column
       assert(readW() == Map(1L -> null, 2L -> "extra"),
         "a lost sidecar must not drop the evolved column from reads")
       // sidecar STALE (the race's outcome: pre-evolution content wins the
@@ -785,7 +763,38 @@ class ManifestLakeSpec extends SparkSpec {
       assert(hs.schema.exists(_.contains("\"w\"")),
         s"the evolved schema must resolve from the header ledger: ${hs.schema}")
       assert(ManifestLake.read(spark, lake).columns.contains("w"))
-    } finally spark.conf.unset("spark.graft.lake.checkpointInterval")
+    } finally ManifestLake.checkpointInterval = saved
+  }
+
+  test("manifest merges write no schema sidecar; an imported lake's first merge moves its schema into the log") {
+    def day(i: Int) = MergeWriter.withPartitionCols(
+      candles((T0 + i * Day, 100.0 + i, "coinbase")), "15m", "spot")
+    // a lock-path lake whose sidecar records an evolved column
+    val lake = tmpLake()
+    MergeWriter.merge(spark, day(0), lake, 1)
+    MergeWriter.merge(spark, day(1).withColumn("vwap", lit(1.25)), lake, 2)
+    val sidecar = new java.io.File(s"$lake/_graft_schema.json")
+    val recorded = java.nio.file.Files.readAllBytes(sidecar.toPath).toSeq
+    ManifestLake.importLockLake(spark, lake)
+    assert(headerSchema(lake).isEmpty, "test premise: the import commits no schema header")
+    // one merge that does not evolve the schema
+    MergeWriter.merge(spark, day(2), lake, 3)
+    assert(ManifestLake.latestVersion(spark, lake) == 2L)
+    assert(headerSchema(lake).exists(_.fieldNames.contains("vwap")),
+      "the first manifest merge must commit the imported schema")
+    assert(java.nio.file.Files.readAllBytes(sidecar.toPath).toSeq == recorded,
+      "a manifest merge must not rewrite the sidecar")
+    val schema = ManifestLake.read(spark, lake).schema
+    assert(sidecar.delete())
+    assert(ManifestLake.read(spark, lake).schema == schema,
+      "the log alone must carry the schema once the first merge committed")
+    assert(ManifestLake.read(spark, lake).count() == 3L)
+    // a lake made a manifest lake up front never gets a sidecar
+    val fresh = manifestLake()
+    MergeWriter.merge(spark, day(0), fresh, 1)
+    MergeWriter.merge(spark, day(1).withColumn("vwap", lit(1.25)), fresh, 2)
+    assert(!new java.io.File(s"$fresh/_graft_schema.json").exists())
+    assert(headerSchema(fresh).exists(_.fieldNames.contains("vwap")))
   }
 
   test("a redelivery from beyond the tag-ledger horizon re-applies LOUDLY and converges") {
@@ -795,8 +804,8 @@ class ManifestLakeSpec extends SparkSpec {
     // miss while the ledger is at capacity warns and bumps the
     // agedTagRedeliveryRisk counter, so an operator sees the
     // at-least-once residual instead of trusting the no-op blindly.
-    val savedTags = ManifestLake.maxAccTags
-    spark.conf.set("spark.graft.lake.checkpointInterval", "2")
+    val (savedTags, savedInterval) = (ManifestLake.maxAccTags, ManifestLake.checkpointInterval)
+    ManifestLake.checkpointInterval = 2
     ManifestLake.maxAccTags = 3
     try {
       val lake = tmpLake()
@@ -834,7 +843,7 @@ class ManifestLakeSpec extends SparkSpec {
         "a ledger hit must not count as an aging risk")
     } finally {
       ManifestLake.maxAccTags = savedTags
-      spark.conf.unset("spark.graft.lake.checkpointInterval")
+      ManifestLake.checkpointInterval = savedInterval
     }
   }
 
@@ -843,7 +852,8 @@ class ManifestLakeSpec extends SparkSpec {
     // manifest's own #tag= from BOTH the header walk and its #tagsacc=,
     // so every checkpointed tag consumed two maxAccTags slots — halving
     // the effective redelivery-dedup horizon at checkpoint cadence.
-    spark.conf.set("spark.graft.lake.checkpointInterval", "2")
+    val saved = ManifestLake.checkpointInterval
+    ManifestLake.checkpointInterval = 2
     try {
       val lake = tmpLake()
       def merge(i: Int): Unit = {
@@ -859,6 +869,6 @@ class ManifestLakeSpec extends SparkSpec {
       val hs = ManifestLake.resolveHeaders(fs, lake, 5L)
       assert(hs.tags == Vector("t1", "t2", "t3", "t4", "t5"),
         s"each tag must appear exactly once, in commit order: ${hs.tags}")
-    } finally spark.conf.unset("spark.graft.lake.checkpointInterval")
+    } finally ManifestLake.checkpointInterval = saved
   }
 }

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
-import graft.lake.{ManifestLake, MergeWriter}
+import graft.lake.MergeWriter
 import graft.model.Candle
 
 /** Merge-upsert semantics (K2): keep-last per key, idempotence, partition
@@ -194,28 +194,18 @@ class MergeWriterSpec extends SparkSpec {
     MergeWriter.merge(spark, day(2).withColumn("vwap", lit(1.25)), lake, 3)
     assert(sidecar.lastModified() != seeded, "an evolving merge must rewrite the sidecar")
     assert(MergeWriter.storedSchema(spark, lake).exists(_.fieldNames.contains("vwap")))
+  }
 
-    // manifest path: the header schema is authoritative, and a sidecar
-    // left stale (an earlier post-commit publish failed) self-heals on
-    // the next merge even when that merge does not evolve the schema
-    val mLake = tmpLake()
-    val mSidecar = new java.io.File(s"$mLake/_graft_schema.json")
-    def rows(id: Long) = Seq((id, 1.0, "a", id)).toDF("id", "v", "part", "seq")
-    def mMerge(id: Long): Unit = ManifestLake.mergeKeyed(spark, rows(id), mLake,
-      keys = Seq("part"), dedupKeys = Seq($"id"), order = Seq($"seq"))
-    mMerge(1L)
-    val good = new String(java.nio.file.Files.readAllBytes(mSidecar.toPath), "UTF-8")
-    val fs = new org.apache.hadoop.fs.Path(mLake)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stale = fs.create(new org.apache.hadoop.fs.Path(mSidecar.getPath), true)
-    try stale.write(rows(0L).drop("seq").schema.json.getBytes("UTF-8")) finally stale.close()
-    mMerge(2L)
-    assert(new String(java.nio.file.Files.readAllBytes(mSidecar.toPath), "UTF-8") == good,
-      "a stale sidecar must be refreshed by the next manifest merge")
-    val healed = mSidecar.lastModified()
-    mMerge(3L)
-    assert(mSidecar.lastModified() == healed,
-      "a same-schema manifest merge must leave a current sidecar untouched")
+  test("an evolving lock-path merge leaves _graft_schema.json and no tmp file") {
+    val lake = tmpLake()
+    def day(i: Int) = MergeWriter.withPartitionCols(
+      candles((T0 + i * Day, 100.0 + i, "coinbase")), "15m", "spot")
+    MergeWriter.merge(spark, day(0), lake, 1)
+    MergeWriter.merge(spark, day(1).withColumn("vwap", lit(1.25)), lake, 2)
+    val names = new java.io.File(lake).listFiles().filter(_.isFile).map(_.getName).toSet
+    assert(names.contains("_graft_schema.json"), s"no sidecar among $names")
+    assert(!names.exists(_.endsWith(".tmp")), s"a publish temp survived: $names")
+    assert(MergeWriter.storedSchema(spark, lake).exists(_.fieldNames.contains("vwap")))
   }
 
   test("wide merges: hundreds to thousands of touched partitions plan, prune and leave siblings alone") {

@@ -32,27 +32,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** [[Session.configure]]'s behaviour confs — the ones the mains run
+    * with — on a 4-core local master with a per-run warehouse.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Session.configure(SparkSession.builder())
       .appName("graft-test")
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // mirror Session.build: same-shaped codegen stages share one class
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // mirror Session.build: every session, cloned streaming ones
-      // included, shares the executor's classloader and codegen cache
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // mirror Session.build: local file ops fork no chmod/readlink
-      .config("spark.hadoop.fs.file.impl", classOf[graft.lake.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.lake.NioLocalFs].getName)
-      // mirror Session.build: catalog-table suites (Scale/Plan) must not
-      // land ./spark-warehouse in the repo working tree; unique per run
-      // so parallel sbt JVMs never share bucketed tables. Same scratch
-      // tier as the mains (RAM-backed when available — Session.scratchRoot)
+      // catalog-table suites (Scale/Plan) must not land ./spark-warehouse
+      // in the repo working tree; unique per run so parallel sbt JVMs
+      // never share bucketed tables. Same scratch tier as the mains
+      // (RAM-backed when available — Session.scratchRoot)
       .config("spark.sql.warehouse.dir",
         s"${Session.scratchRoot}/graft_test_warehouse_${java.util.UUID.randomUUID().toString.take(8)}")
       .config("spark.local.dir", s"${Session.scratchRoot}/graft_test_local")

@@ -31,15 +31,13 @@ class StreamingSpec extends SparkSpec {
     // offsets at query start
     mem.addData(c(T0, 100.0), c(T0 + 900000, 101.0))
     val q = LiveIngest.start(spark, mem.toDF(), s"$dir/lake", s"$dir/ckpt",
-      interval = "15m", trigger = Trigger.AvailableNow(),
-      watermarkDelay = "10 minutes")
+      interval = "15m", trigger = Trigger.AvailableNow())
     q.awaitTermination()
 
     // second run: overlap T0 with corrected value + one new candle
     mem.addData(c(T0, 999.0), c(T0 + 1800000, 102.0))
     val q2 = LiveIngest.start(spark, mem.toDF(), s"$dir/lake", s"$dir/ckpt",
-      interval = "15m", trigger = Trigger.AvailableNow(),
-      watermarkDelay = "10 minutes")
+      interval = "15m", trigger = Trigger.AvailableNow())
     q2.awaitTermination()
 
     val out = spark.read.parquet(s"$dir/lake").orderBy("timestamp").collect()
@@ -55,8 +53,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_stream2").toString
     mem.addData(c(T0, 100.0), c(T0, 100.0), c(T0, 100.0))
     val q = LiveIngest.start(spark, mem.toDF(), s"$dir/lake", s"$dir/ckpt",
-      interval = "15m", trigger = Trigger.AvailableNow(),
-      watermarkDelay = "10 minutes")
+      interval = "15m", trigger = Trigger.AvailableNow())
     q.awaitTermination()
     assert(spark.read.parquet(s"$dir/lake").count() == 1)
   }
@@ -73,8 +70,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** A lake of 2 exchanges x 3 days, as a backfill leaves it. */
-  private def seededLake(): String = {
+  private def seededLake(manifest: Boolean = false): String = {
     val lake = Files.createTempDirectory("graft_stream_seed").toString + "/lake"
+    if (manifest) ManifestLake.create(spark, lake)
     val rows = for { ex <- Seq("coinbase", "kraken"); d <- 0 until 3; k <- 0 until 4 }
       yield c(T0 + d * 86400000L + k * 900000L, 100.0 + k, ex)
     MergeWriter.merge(spark, MergeWriter.withPartitionCols(rows.toDF(), "15m", "spot"), lake, 0)
@@ -144,33 +142,30 @@ class StreamingSpec extends SparkSpec {
 
   for (protocol <- Seq("lock", "manifest"))
     test(s"an empty micro-batch writes and commits nothing ($protocol path)") {
-      if (protocol == "manifest") spark.conf.set("spark.graft.lake.commit", "manifest")
-      try {
-        val lake = seededLake()
-        val absent = Files.createTempDirectory("graft_stream_absent").toString + "/lake"
-        assert(ManifestLake.isManifestLake(spark, lake) == (protocol == "manifest"))
-        val before = snapshot(lake)
-        val version = ManifestLake.latestVersion(spark, lake)
-        for (target <- Seq(lake, absent)) {
-          // the merge itself, then the same through a live launch
-          MergeWriter.merge(spark, MergeWriter.withPartitionCols(
-            liveRows(300.0, 0).toDF().filter($"close" < 0.0), "15m", "spot"), target, 5)
-          implicit val sc = spark.sqlContext
-          val mem = MemoryStream[Candle]
-          mem.addData(liveRows(300.0, 0))
-          // a predicate the optimizer cannot fold: the micro-batch runs
-          // over the new offsets and hands foreachBatch zero rows
-          val q = LiveIngest.start(spark, mem.toDF().filter($"close" < 0.0), target,
-            Files.createTempDirectory("graft_ckpt").toString, "15m",
-            trigger = Trigger.AvailableNow())
-          q.awaitTermination()
-          assert(q.recentProgress.exists(_.numInputRows == 10), "no micro-batch ran")
-        }
-        val after = snapshot(lake)
-        val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
-        assert(changed.isEmpty, s"the lake must stay byte-identical; changed: $changed")
-        assert(ManifestLake.latestVersion(spark, lake) == version)
-        assert(!Files.exists(Paths.get(absent)), "an empty batch must not create the lake root")
-      } finally spark.conf.unset("spark.graft.lake.commit")
+      val lake = seededLake(manifest = protocol == "manifest")
+      val absent = Files.createTempDirectory("graft_stream_absent").toString + "/lake"
+      assert(ManifestLake.isManifestLake(spark, lake) == (protocol == "manifest"))
+      val before = snapshot(lake)
+      val version = ManifestLake.latestVersion(spark, lake)
+      for (target <- Seq(lake, absent)) {
+        // the merge itself, then the same through a live launch
+        MergeWriter.merge(spark, MergeWriter.withPartitionCols(
+          liveRows(300.0, 0).toDF().filter($"close" < 0.0), "15m", "spot"), target, 5)
+        implicit val sc = spark.sqlContext
+        val mem = MemoryStream[Candle]
+        mem.addData(liveRows(300.0, 0))
+        // a predicate the optimizer cannot fold: the micro-batch runs
+        // over the new offsets and hands foreachBatch zero rows
+        val q = LiveIngest.start(spark, mem.toDF().filter($"close" < 0.0), target,
+          Files.createTempDirectory("graft_ckpt").toString, "15m",
+          trigger = Trigger.AvailableNow())
+        q.awaitTermination()
+        assert(q.recentProgress.exists(_.numInputRows == 10), "no micro-batch ran")
+      }
+      val after = snapshot(lake)
+      val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+      assert(changed.isEmpty, s"the lake must stay byte-identical; changed: $changed")
+      assert(ManifestLake.latestVersion(spark, lake) == version)
+      assert(!Files.exists(Paths.get(absent)), "an empty batch must not create the lake root")
     }
 }
