@@ -92,9 +92,9 @@ object Compactor {
       .repartition(keys.map(col): _*)
     // maxRecordsPerFile caps pathological partitions — a per-write
     // option, not a session conf mutation
-    ManifestLake.replacePartitions(spark, path, fragged.map(_._1).toSet,
-      affected, keys, Map("maxRecordsPerFile" -> maxRecordsPerFile.toString),
-      expectedVersion = baseVersion)
+    ManifestLake.replacePartitions(spark, path, baseVersion, entries,
+      fragged.map(_._1).toSet, affected, keys,
+      Map("maxRecordsPerFile" -> maxRecordsPerFile.toString))
     summary.orderBy($"partition")
   }
 
@@ -199,8 +199,8 @@ object Compactor {
       .repartition(n, (keys :+ "__file").map(col): _*)
       .sortWithinPartitions(sortExprs: _*)
       .drop("__file", "__pid", "__mid", "__m0", "__start")
-    ManifestLake.replacePartitions(spark, path, entries.keySet, affected,
-      keys, Map("maxRecordsPerFile" -> maxRecordsPerFile.toString),
-      expectedVersion = baseVersion)
+    ManifestLake.replacePartitions(spark, path, baseVersion, entries,
+      entries.keySet, affected, keys,
+      Map("maxRecordsPerFile" -> maxRecordsPerFile.toString))
   }
 }

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bulk predicate DELETE over the partitioned lake — the data-governance
@@ -18,34 +18,40 @@ import org.apache.spark.sql.functions._
   * are `left_anti` the erasure list.
   *
   * Write-serialization (round-11 verdict item 1): erasure is a
-  * read-rewrite cycle over shared lake paths, so it takes the SAME
-  * discipline as the merge it races. On a lock-path lake the whole
-  * cycle runs under [[MergeWriter.withWriterLock]] — a merge that read
-  * pre-erasure rows can no longer overwrite them back AFTER the
-  * erasure (the resurrection failure a GDPR verb cannot have; the
-  * reference serializes its write phases for the same reason,
-  * crypto_collector.py:754–769). On a manifest lake the rewrite is a
-  * [[ManifestLake.replacePartitions]] commit: survivors land in a
-  * private txn directory and ONE atomic manifest create both publishes
-  * them and un-references the erased files, so erase × merge is
-  * totally ordered by the version chain and the loser of any race
-  * fails loud. Reads go through the tracked lake schema
-  * ([[MergeWriter.readLake]] semantics) — footer-sampling an evolved
-  * lake could silently drop the new column from every rewritten bucket.
+  * read-rewrite cycle over shared lake paths, so it runs through the
+  * SAME protocol as the merge it races ([[Rewrite]], opened by the
+  * lake's layout). On a lock-path lake the whole cycle holds the
+  * single-writer lock — a merge that read pre-erasure rows can no
+  * longer overwrite them back AFTER the erasure (the resurrection
+  * failure a GDPR verb cannot have; the reference serializes its write
+  * phases for the same reason, crypto_collector.py:754–769). On a
+  * manifest lake the rewrite is one [[ManifestLake.replacePartitions]]
+  * commit against the snapshot it read: survivors land in a private txn
+  * directory and ONE atomic manifest create both publishes them and
+  * un-references the erased files, so erase × merge is totally ordered
+  * by the version chain and the loser of any race fails loud. A
+  * fully-erased bucket's files then become unreferenced garbage for
+  * [[ManifestLake.vacuum]] — erased BYTES linger until a vacuum with
+  * the deployment's retention runs, the two-step (DELETE, then VACUUM)
+  * every immutable-file table format has. Both protocols read through
+  * the tracked lake schema — footer-sampling an evolved lake could
+  * silently drop the new column from every rewritten bucket; a lake
+  * written without one (a plain `partitionBy("bucket")` write) is read
+  * by footer inference with `bucket` kept a string ([[Rewrite.scan]]).
   *
   * Scale: cost is O(touched partitions' data), not lake size — with B
   * buckets an erasure list of any size touches at most B partitions,
   * and a single-user request touches exactly one. The anti join
   * broadcasts the erasure list when small (the common case) and
   * shuffle-joins co-partitioned otherwise — Spark's planner picks by
-  * size. The erasure list is checkpointed BEFORE the overwrite because
-  * it usually derives from the lake being rewritten (Spark refuses to
+  * size. The erasure list is checkpointed BEFORE the rewrite because it
+  * usually derives from the lake being rewritten (Spark refuses to
   * overwrite a path its read plan references — the MergeWriter lesson).
   */
 object Eraser {
 
-  /** Test failpoint: runs after the erasure computed its survivors and
-    * before the rewrite lands — the window a racing merge would need to
+  /** Test failpoint: runs after the erasure read its touched partitions
+    * and before the rewrite lands — the window a racing merge would need to
     * resurrect erased rows. Production leaves the no-op.
     */
   @volatile private[graft] var beforeRewriteHook: () => Unit = () => ()
@@ -66,91 +72,23 @@ object Eraser {
       .localCheckpoint() // cut lineage: usually derived from `lake` itself
     val touched = eraseIds
       .select(pmod(hash(col(keyCol)), lit(buckets)).cast("string").as("bucket"))
-      .distinct().as[String].collect().toSeq // bounded by `buckets`
-
-    if (ManifestLake.isManifestLake(spark, lake))
-      return eraseManifest(spark, lake, keyCol, eraseIds, touched, extraHeaders)
-
-    val fs = new org.apache.hadoop.fs.Path(lake)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    MergeWriter.withWriterLock(fs, lake) {
-      // read through the tracked schema (additive evolution: a
-      // footer-sampled inference could pick a pre-evolution file and the
-      // rewrite would drop the evolved column from every touched bucket)
-      val lakeDf = MergeWriter.storedSchema(spark, lake) match {
-        case Some(sc) => spark.read.schema(sc).parquet(lake)
-        case None     => spark.read.parquet(lake)
+      .distinct().as[String].collect().toSeq.map(Seq(_)) // bounded by `buckets`
+    Rewrite.open(spark, lake, Seq("bucket")) { rw =>
+      rw.read(touched, rw.schema) match {
+        case None =>
+          // no touched partition exists — nothing to rewrite, but headers
+          // a caller asked to ride THIS erasure's commit (e.g. syncTo's
+          // durable offset) must still land: a metadata-only commit
+          if (extraHeaders.nonEmpty) ManifestLake.commitMetadata(spark, lake, extraHeaders)
+          spark.emptyDataset[(String, Long)].toDF("bucket", "rows_removed")
+        case Some(affected) =>
+          val before = affected.groupBy($"bucket").agg(count(lit(1)).as("n_before"))
+          val surviving = affected.join(eraseIds, Seq(keyCol), "left_anti")
+          beforeRewriteHook()
+          rw.replace(surviving, touched, mayEmpty = true, headers = extraHeaders)
+          stats(surviving, before)
       }
-      val affected = lakeDf
-        // partition-column inference types all-digit bucket values as int;
-        // normalize to the writer's string so the prune and the rewrite
-        // round-trip the directory names exactly
-        .withColumn("bucket", col("bucket").cast("string"))
-        .filter($"bucket".isin(touched: _*))
-        .localCheckpoint()
-      val before = affected.groupBy($"bucket").agg(count(lit(1)).as("n_before"))
-      val surviving = affected.join(eraseIds, Seq(keyCol), "left_anti")
-        .localCheckpoint() // materialize before overwriting what it read
-      beforeRewriteHook()
-      surviving.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(lake)
-      // Dynamic overwrite only replaces partitions the write PRODUCES; a
-      // touched bucket whose every row was erased produces nothing and
-      // would silently keep its old files — the one failure mode an
-      // erasure verb cannot have. Remove such directories explicitly.
-      val survivingBuckets = surviving.select($"bucket").distinct()
-        .as[String].collect().toSet
-      touched.filterNot(survivingBuckets).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(lake, s"bucket=$b"), true)
-      }
-      stats(surviving, before)
     }
-  }
-
-  /** Manifest-lake erasure: read ONLY the touched buckets' committed
-    * partitions (manifest-resolved — a plain `spark.read.parquet` here
-    * would sweep superseded txn files in), anti-join, and publish the
-    * survivors through one [[ManifestLake.replacePartitions]] commit. A
-    * fully-erased bucket simply leaves the manifest; its files become
-    * unreferenced garbage for [[ManifestLake.vacuum]] — note erased
-    * BYTES linger until a vacuum with the deployment's retention runs,
-    * the same two-step every immutable-file table format has (DELETE
-    * then VACUUM for physical reclamation).
-    */
-  private def eraseManifest(spark: SparkSession, lake: String, keyCol: String,
-                            eraseIds: DataFrame, touched: Seq[String],
-                            extraHeaders: Seq[(String, String)] = Nil): DataFrame = {
-    import spark.implicits._
-    // version and entries resolve TOGETHER and the version rides into the
-    // commit CAS: a merge landing between this snapshot and the commit
-    // fails THIS erasure loudly instead of being silently overwritten
-    val (baseVersion, entries) = ManifestLake.currentState(spark, lake)
-    val touchedRels = touched.map(b => s"bucket=$b").toSet
-    val present = entries.view.filterKeys(touchedRels).toMap
-    // No localCheckpoints on this path (round-15): the rewrite lands in
-    // a NEW immutable txn dir, so nothing here overwrites what it reads
-    // (the lock path above does, and keeps its checkpoints). `before`
-    // and the returned stats re-read the superseded txn files lazily —
-    // still referenced until vacuum, and immutable, so the counts are
-    // the pre-erasure truth; two materialization jobs per erasure gone.
-    val affected = ManifestLake.readEntriesGrouped(spark, lake, present)
-      .getOrElse {
-        // no touched partitions exist — nothing to rewrite, but headers
-        // a caller asked to ride THIS erasure's commit (e.g. syncTo's
-        // durable offset) must still land: downgrade to a metadata commit
-        if (extraHeaders.nonEmpty)
-          ManifestLake.commitMetadata(spark, lake, extraHeaders)
-        return spark.emptyDataset[(String, Long)]
-          .toDF("bucket", "rows_removed")
-      }
-    val before = affected.groupBy($"bucket").agg(count(lit(1)).as("n_before"))
-    val surviving = affected.join(eraseIds, Seq(keyCol), "left_anti")
-    beforeRewriteHook()
-    ManifestLake.replacePartitions(spark, lake, present.keySet,
-      surviving, Seq("bucket"), expectedVersion = baseVersion,
-      headers = extraHeaders)
-    stats(surviving, before)
   }
 
   private def stats(surviving: DataFrame, before: DataFrame): DataFrame = {

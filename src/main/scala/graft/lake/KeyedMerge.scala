@@ -5,52 +5,47 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.operators.KeepLast
 
-/** The keyed-merge body both lake commit protocols share — the
-  * reference's `save_to_parquet` upsert (crypto_collector.py:523–558)
-  * minus its commit: additive schema evolution → touched partition keys
-  * → affected rows ∪ batch → explicit-order dedup → clustering by
-  * partition key. The protocols differ only in how they read the
-  * touched partitions' existing rows and how they publish the result:
-  *
-  *  - lock path ([[MergeWriter.mergeKeyed]]): a read of the touched
-  *    partition directories plus a lineage cut, then a
-  *    dynamic-partition overwrite under the single-writer lock;
-  *  - manifest path ([[ManifestLake.mergeKeyed]]): the committed
-  *    manifest entries of the touched partitions, then a private txn
-  *    directory plus the manifest CAS.
+/** The keyed-merge body both lake commit protocols run — the
+  * reference's `save_to_parquet` upsert (crypto_collector.py:523–558):
+  * additive schema evolution → touched partition keys → affected rows ∪
+  * batch → explicit-order dedup → clustering by partition key → replace.
+  * The protocol ([[Rewrite]]) supplies the read of the touched
+  * partitions and their replace; [[MergeWriter.mergeKeyed]] opens it by
+  * the lake's layout, [[ManifestLake.mergeKeyed]] on a manifest snapshot.
   */
 private[lake] object KeyedMerge {
 
-  /** One merge up to its commit: the evolved table `schema`, the
-    * `touched` partition-key values (one Seq per distinct combination,
-    * in `keys` order; empty when collection was skipped or the batch is
-    * empty), the `deduped` relation (the merge's result) and `toWrite`,
-    * the same rows clustered by partition key.
+  /** Merge `tagged` into the lake behind `rw` and return the merged
+    * relation. Contract: `rw.keys` columns in `tagged` are non-null
+    * STRINGs (callers derive them with date_format/lit) and `tagged`
+    * already carries the ordering column(s). A `commitTag` the lake has
+    * already committed makes the merge a no-op; otherwise it rides the
+    * commit with `headers`.
     */
-  final case class Prepared(schema: StructType, touched: Seq[Seq[String]],
-                            deduped: DataFrame, toWrite: DataFrame)
-
-  /** Contract: `keys` columns in `tagged` are non-null STRINGs (callers
-    * derive them with date_format/lit) and `tagged` already carries the
-    * ordering column(s). `stored` is the lake's tracked schema, if any.
-    * `collectTouched = false` skips the touched-key pass (a lake with
-    * nothing to read yet); otherwise `readAffected(schema, touched)`
-    * returns the touched partitions' existing rows, or None for none.
-    */
-  def apply(spark: SparkSession, tagged: DataFrame, keys: Seq[String],
+  def apply(spark: SparkSession, rw: Rewrite, tagged: DataFrame,
             dedupKeys: Seq[Column], order: Seq[Column], clusteredDedup: Boolean,
-            stored: Option[StructType], collectTouched: Boolean)(
-      readAffected: (StructType, Seq[Seq[String]]) => Option[DataFrame]): Prepared = {
+            commitTag: Option[String] = None,
+            headers: Seq[(String, String)] = Nil): DataFrame = {
+    if (commitTag.exists(rw.redelivered)) {
+      // still CONSUME every partition of the batch: inside foreachBatch
+      // the upstream stateful operators (e.g. dropDuplicatesWithinWatermark)
+      // only commit their per-partition state stores when the batch is
+      // fully processed — an early return would fail Spark's
+      // state-store commit validation on the redelivered epoch
+      tagged.write.format("noop").mode("overwrite").save()
+      return tagged
+    }
+    val keys = rw.keys
     // Additive schema evolution, validated before any job runs: a type
     // change is a loud reject, a new column evolves the tracked schema,
     // and existing data is read THROUGH the evolved schema so partitions
     // written before the new column still surface it (as null). The
     // first merge seeds the schema from the batch.
-    val schema = stored match {
+    val schema = rw.schema match {
       case Some(s) => evolveSchema(s, tagged.schema)
       case None    => StructType(tagged.schema.fields.map(_.copy(nullable = true)))
     }
-    val touched = if (collectTouched) touchedKeys(tagged, keys) else Seq.empty
+    val touched = if (rw.collectsTouched) touchedKeys(tagged, keys) else Seq.empty
     // allowMissingColumns both ways: the batch may ADD a column (existing
     // rows get null) or a caller may still send the old shape after the
     // lake evolved (batch rows get null). Dedup then applies whole-row
@@ -58,7 +53,7 @@ private[lake] object KeyedMerge {
     // in the new column, the correct "that writer never knew the field".
     val combined =
       if (touched.isEmpty) tagged
-      else readAffected(schema, touched) match {
+      else rw.read(touched, Some(schema)) match {
         case Some(a) => a.unionByName(tagged, allowMissingColumns = true)
         case None    => tagged
       }
@@ -83,7 +78,15 @@ private[lake] object KeyedMerge {
       else KeepLast.dedup(combined, dedupKeys, order)
     val toWrite =
       if (clusteredDedup) deduped else deduped.repartition(nWrite, keys.map(col): _*)
-    Prepared(schema, touched, deduped, toWrite)
+    // An empty batch writes, commits and publishes nothing. On an
+    // existing lake the touched keys say so up front; on an absent lock
+    // lake the write itself is the only pass over the batch (a key pass
+    // there would decode a backfill's whole first batch twice), and the
+    // replace removes the root it created if the write produced nothing.
+    if (touched.nonEmpty || !rw.collectsTouched)
+      rw.replace(toWrite, touched, mayEmpty = false, Some(schema),
+        commitTag.map("tag" -> _).toSeq ++ headers)
+    deduped
   }
 
   /** The batch's distinct partition-key combinations, bounded by the

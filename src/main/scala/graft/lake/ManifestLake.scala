@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Manifest-pointer commit protocol for the parquet lake — the
@@ -98,7 +99,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 object ManifestLake {
 
-  /** Test failpoint: runs after a merge's data write and before its
+  /** Test failpoint: runs after a rewrite's txn write and before its
     * manifest create — the torn-merge / commit-race window the protocol
     * exists to defend. Tests throw here (crash) or commit a competing
     * manifest here (race); production leaves the no-op.
@@ -425,13 +426,14 @@ object ManifestLake {
     * path's `_graft_schema.json` sidecar — the record of an imported
     * lake until its first manifest merge moves the schema into the log.
     */
-  private[lake] def trackedSchema(fs: FileSystem, path: String): Option[org.apache.spark.sql.types.StructType] = {
-    val v = currentVersion(fs, path)
-    val fromHeaders = if (v == 0L) None else resolveHeaders(fs, path, v).schema
-    fromHeaders.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .orElse(MergeWriter.readStoredSchema(fs, path))
-  }
+  private[lake] def trackedSchema(fs: FileSystem, path: String): Option[StructType] =
+    trackedSchema(fs, path, resolveHeaders(fs, path, currentVersion(fs, path)))
+
+  private def trackedSchema(fs: FileSystem, path: String, hs: HeaderState): Option[StructType] =
+    headerSchema(hs).orElse(MergeWriter.readStoredSchema(fs, path))
+
+  private def headerSchema(hs: HeaderState): Option[StructType] =
+    hs.schema.map(j => DataType.fromJson(j).asInstanceOf[StructType])
 
   // Partition values must round-trip through directory names without
   // escaping (symbols, intervals, exchanges, yyyyMMdd dates and source
@@ -461,45 +463,36 @@ object ManifestLake {
     * its unreferenced partitions back in).
     */
   private[graft] def readEntriesGrouped(spark: SparkSession, path: String,
-                                        entries: Map[String, String]): Option[DataFrame] = {
-    val byTxn = entries.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (txn, es) =>
-        txn -> es.map(_._1).sorted.map(r => s"${txnBase(path, txn)}/$r")
-      }
-    readGroupedPaths(spark, path, byTxn)
-  }
+                                        entries: Map[String, String]): Option[DataFrame] =
+    readGroupedPaths(spark, path, entryGroups(path, entries))
+
+  private def entryGroups(path: String, entries: Map[String, String]): Seq[(String, Seq[String])] =
+    entries.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map { case (txn, es) =>
+      txn -> es.map(_._1).sorted.map(r => s"${txnBase(path, txn)}/$r")
+    }
 
   /** [[readEntriesGrouped]]'s underlying shape, also used by
     * [[FileStats]]'s skipping scans (whose groups are surviving FILE
-    * paths rather than whole partition directories): one
-    * basePath-recovered scan per txn, unioned by name across txns.
-    * When the lake has a tracked schema ([[trackedSchema]]: every merge
-    * records one) the read goes THROUGH it — partition columns keep
+    * paths rather than whole partition directories), through the lake's
+    * [[trackedSchema]] (every merge records one): partition columns keep
     * their tracked type (STRING by the merge contract) and files that
-    * predate an evolved column surface it as null. The schema-less fallback
-    * probes the schema through a CLONED session with partition-type
-    * inference disabled (`spark.newSession()` isolates SQLConf — the
-    * previous session-global conf flip could race a concurrent read in
-    * the same session, round-13 advice), then plans the real scan in
-    * the caller's session with that explicit schema.
+    * predate an evolved column surface it as null.
     */
   private[lake] def readGroupedPaths(spark: SparkSession, path: String,
-                                     groups: Seq[(String, Seq[String])]): Option[DataFrame] = {
+                                     groups: Seq[(String, Seq[String])]): Option[DataFrame] =
+    scanGroups(spark, path, groups, trackedSchema(fsFor(spark, path), path))
+
+  /** One basePath-recovered [[Rewrite.scan]] per txn group, unioned by
+    * name across txns; `schema` is resolved only when a group holds a
+    * path.
+    */
+  private def scanGroups(spark: SparkSession, path: String,
+                         groups: Seq[(String, Seq[String])],
+                         schema: => Option[StructType]): Option[DataFrame] = {
     val nonEmpty = groups.filter(_._2.nonEmpty)
     if (nonEmpty.isEmpty) return None
-    val fs = fsFor(spark, path)
-    val stored = trackedSchema(fs, path)
-    def readTxn(txn: String, paths: Seq[String]): DataFrame = {
-      val base = txnBase(path, txn)
-      val schema = stored.getOrElse {
-        val probe = spark.newSession()
-        probe.conf.set(
-          "spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        probe.read.option("basePath", base).parquet(paths: _*).schema
-      }
-      spark.read.schema(schema).option("basePath", base).parquet(paths: _*)
-    }
-    Some(nonEmpty.map { case (txn, ps) => readTxn(txn, ps) }
+    val sc = schema
+    Some(nonEmpty.map { case (txn, ps) => Rewrite.scan(spark, txnBase(path, txn), ps, sc) }
       .reduce(_.unionByName(_, allowMissingColumns = true)))
   }
 
@@ -679,115 +672,100 @@ object ManifestLake {
   private def newTxnDirName(v: Long): String =
     s"txn-${v + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  /** Keyed merge with manifest commit — [[KeyedMerge]]'s body, shared
-    * with the lock path's mergeKeyed (affected-partition read → union →
-    * explicit-order dedup → replace touched partitions), with a
-    * different durability story:
-    * the replace is a new immutable txn directory plus one atomic
-    * manifest publish, so a torn merge is INVISIBLE to readers and a
-    * concurrent writer loses the commit race loudly. `commitTag` makes
-    * redelivery a no-op (see object doc); schema evolution follows the
-    * lock path's additive-only contract. The committed manifest is a
-    * DELTA — its size is the batch's touched-partition count, not the
-    * lake's entry count.
+  /** Keyed merge with manifest commit — [[KeyedMerge]]'s body over a
+    * [[snapshot]] of the lake, so its affected read, txn write and CAS
+    * are the ones every rewriting verb shares ([[replacePartitions]]). A
+    * torn merge is INVISIBLE to readers and a concurrent writer loses the
+    * commit race loudly. `commitTag` makes redelivery a no-op (see object
+    * doc); schema evolution follows the lock path's additive-only
+    * contract. The committed manifest is a DELTA — its size is the
+    * batch's touched-partition count, not the lake's entry count.
     */
   private[graft] def mergeKeyed(spark: SparkSession, tagged: DataFrame, path: String,
                                 keys: Seq[String], dedupKeys: Seq[org.apache.spark.sql.Column],
                                 order: Seq[org.apache.spark.sql.Column],
                                 commitTag: Option[String] = None,
                                 extraHeaders: Seq[(String, String)] = Nil,
-                                clusteredDedup: Boolean = false): DataFrame = {
+                                clusteredDedup: Boolean = false): DataFrame =
+    KeyedMerge(spark, snapshot(spark, path, keys), tagged, dedupKeys, order,
+      clusteredDedup, commitTag, extraHeaders)
+
+  /** The manifest protocol's [[Rewrite]] over the lake's current state:
+    * version, entries and header state resolve once, TOGETHER, and the
+    * replace's CAS expects that version — a commit landing between this
+    * snapshot and the replace fails the rewrite loudly instead of being
+    * silently overwritten.
+    */
+  private[lake] def snapshot(spark: SparkSession, path: String, keys: Seq[String]): Rewrite = {
     val fs = fsFor(spark, path)
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
     val v = currentVersion(fs, path)
-    val hs = if (v == 0L) HeaderState(Vector.empty, Map.empty, None,
-      truncated = false, opens = 0) else resolveHeaders(fs, path, v)
-    commitTag.foreach { t =>
-      if (hs.tags.contains(t)) {
-        log.info(
-          s"ManifestLake: commit tag '$t' already committed at $path — " +
-            "redelivered batch, no-op")
-        // still CONSUME every partition of the batch: inside foreachBatch
-        // the upstream stateful operators (e.g. dropDuplicatesWithinWatermark)
-        // only commit their per-partition state stores when the batch is
-        // fully processed — an early return would fail Spark's
-        // state-store commit validation on the redelivered epoch
-        tagged.write.format("noop").mode("overwrite").save()
-        return tagged
-      } else if (hs.tags.size >= maxAccTags) {
-        // the dedup ledger is at capacity, so a tag THIS old could have
-        // aged out: if this is a redelivery from beyond the horizon it
-        // will RE-APPLY below (keep-last converges, but the operator
-        // must SEE the at-least-once residual instead of trusting the
-        // no-op blindly — round-14 verdict item 5)
-        agedTagRedeliveryRisk.incrementAndGet()
-        log.warn(
-          s"ManifestLake: commit tag '$t' not found at $path but the tag " +
-            s"ledger is at capacity (${hs.tags.size} >= $maxAccTags) — if " +
-            "this batch is a redelivery from beyond the ledger horizon it " +
-            "re-applies now (keep-last converges). Raise maxAccTags or " +
-            "tighten redelivery lag if this recurs.")
+    new ManifestRewrite(spark, fs, path, keys, v, readManifest(fs, path, v),
+      resolveHeaders(fs, path, v))
+  }
+
+  /** Read: the snapshot's entries for the touched partitions, one scan
+    * per txn ([[readEntriesGrouped]]'s shape). No localCheckpoint
+    * (round-15): the replace writes a NEW immutable txn dir, so the write
+    * streams the affected rows straight from their (immutable, still-
+    * referenced) files; materializing them first would be one extra job
+    * and one extra pass of block writes, bought for nothing.
+    *
+    * Replace: [[replacePartitions]] against the snapshot's version and
+    * manifest.
+    */
+  private final class ManifestRewrite(spark: SparkSession, fs: FileSystem, path: String,
+                                      val keys: Seq[String], v: Long,
+                                      manifest: Map[String, String],
+                                      hs: HeaderState) extends Rewrite {
+    val schema: Option[StructType] = trackedSchema(fs, path, hs)
+    def collectsTouched: Boolean = true
+
+    def redelivered(tag: String): Boolean = {
+      val log = org.slf4j.LoggerFactory.getLogger(ManifestLake.getClass)
+      if (hs.tags.contains(tag)) {
+        log.info(s"ManifestLake: commit tag '$tag' already committed at $path — " +
+          "redelivered batch, no-op")
+        true
+      } else {
+        if (hs.tags.size >= maxAccTags) {
+          // the dedup ledger is at capacity, so a tag THIS old could have
+          // aged out: if this is a redelivery from beyond the horizon it
+          // re-applies (keep-last converges, but the operator must SEE the
+          // at-least-once residual instead of trusting the no-op blindly —
+          // round-14 verdict item 5)
+          agedTagRedeliveryRisk.incrementAndGet()
+          log.warn(
+            s"ManifestLake: commit tag '$tag' not found at $path but the tag " +
+              s"ledger is at capacity (${hs.tags.size} >= $maxAccTags) — if " +
+              "this batch is a redelivery from beyond the ledger horizon it " +
+              "re-applies now (keep-last converges). Raise maxAccTags or " +
+              "tighten redelivery lag if this recurs.")
+        }
+        false
       }
     }
-    // The previous schema comes from the manifest HEADERS when present
-    // (commit-CAS-authoritative; a concurrent writer's evolution is
-    // visible the moment its commit is), with the lock path's sidecar as
-    // the fallback for an imported lake's first manifest merge.
-    val headerSchema = hs.schema
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val prevSchema = headerSchema.orElse(MergeWriter.readStoredSchema(fs, path))
-    val manifest = readManifest(fs, path, v)
-    // No localCheckpoint on the affected read (round-15): unlike the
-    // lock path (which must cut lineage because dynamic overwrite
-    // refuses to write a path its own plan reads), this merge writes a
-    // NEW immutable txn dir — the write action streams the affected
-    // partitions straight from their (immutable, still-referenced)
-    // parquet files, so materializing them first is one extra job and
-    // one extra pass of block writes per merge, bought for nothing.
-    val m = KeyedMerge(spark, tagged, keys, dedupKeys, order, clusteredDedup,
-        prevSchema, collectTouched = true) { (_, touched) =>
+
+    def read(touched: Seq[Seq[String]], schema: Option[StructType]): Option[DataFrame] = {
       touched.foreach(vs => keys.zip(vs).foreach { case (k, s) =>
         if (PlainValue.findFirstIn(s).isEmpty) throw new IllegalArgumentException(
           s"ManifestLake: partition value '$s' for key '$k' needs " +
             "path escaping — only [0-9A-Za-z._+-] values are supported")
       })
       val rels = touched.map(relPath(keys, _)).toSet
-      readEntriesGrouped(spark, path, manifest.view.filterKeys(rels).toMap)
+      scanGroups(spark, path, entryGroups(path, manifest.view.filterKeys(rels).toMap), schema)
     }
-    // an empty batch: no txn write, no commit
-    if (m.touched.isEmpty) return m.deduped
-    // the merged schema rides THIS commit's headers (atomic with the
-    // CAS) whenever it differs from the HEADER schema — so an evolving
-    // merge records its column, and an imported lake's first merge moves
-    // its sidecar schema into the log; header bytes ∝ change
-    val schemaHeader =
-      if (!headerSchema.map(_.json).contains(m.schema.json))
-        Seq("schema" -> enc(m.schema.json))
-      else Nil
 
-    val txnName = newTxnDirName(v)
-    val txnDir = s"$path/data/$txnName"
-    m.toWrite
-      // committer v2 per-write (guide §6): this is a writer-private NEW
-      // directory whose visibility is gated by the manifest commit, so
-      // task-commit renames straight to the destination are safe and the
-      // v1 job-commit re-walk is pure overhead (session default stays v1
-      // for the lock path's dynamic overwrite, where v2 measured slower)
-      .write.option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .mode(SaveMode.Overwrite).partitionBy(keys: _*).parquet(txnDir)
-
-    beforeCommitHook()
-
-    // remap every touched partition to the new txn; new partitions are
-    // whatever the write actually produced under txnDir
-    val written = leafPartitions(fs, new Path(txnDir), new Path(txnDir))
-    val next = manifest -- m.touched.map(relPath(keys, _)) ++
-      written.map(_ -> txnName).toMap
-    commitManifest(fs, path, v, next,
-      commitTag.map("tag" -> _).toSeq ++ schemaHeader ++ extraHeaders,
-      base = Some(manifest))
-    m.deduped
+    def replace(rows: DataFrame, touched: Seq[Seq[String]], mayEmpty: Boolean,
+                schema: Option[StructType], headers: Seq[(String, String)]): Unit = {
+      // a new schema rides THIS commit's headers (atomic with the CAS)
+      // whenever it differs from the HEADER schema — so an evolving merge
+      // records its column, and an imported lake's first merge moves its
+      // sidecar schema into the log; header bytes ∝ change
+      val schemaHeader = schema.filterNot(s => headerSchema(hs).map(_.json).contains(s.json))
+        .map(s => "schema" -> enc(s.json))
+      replacePartitions(spark, path, v, manifest, touched.map(relPath(keys, _)).toSet,
+        rows, keys, headers = headers ++ schemaHeader)
+    }
   }
 
   /** [[mergeKeyed]] with bounded optimistic retry: a lost commit CAS
@@ -893,43 +871,48 @@ object ManifestLake {
               s"'${newKeys(i)}' must be non-null [0-9A-Za-z._+-]")
         }
       }
-    replacePartitions(spark, path, entries.keySet,
+    replacePartitions(spark, path, baseVersion, entries, entries.keySet,
       current.repartition(newKeys.map(org.apache.spark.sql.functions.col): _*),
-      newKeys, expectedVersion = baseVersion)
+      newKeys)
   }
 
   /** Replace the CONTENT of `touchedRels` partitions with `replacement`
-    * (partitioned by `keys`) in one manifest commit — the primitive
-    * behind rewriting verbs that REMOVE rows ([[Eraser]]) rather than
-    * merge them. A touched partition absent from the replacement output
-    * is dropped from the manifest entirely (the fully-erased case —
-    * no directory deletion dance, the files just stop being referenced
-    * and [[vacuum]] reclaims them). Untouched entries are carried
-    * verbatim FROM `expectedVersion`'s manifest, and the commit creates
-    * exactly `m(expectedVersion + 1)` — the CAS spans the caller's
-    * entire snapshot-to-commit window, not just the write phase: a
-    * rewriting verb resolves the version once, reads/derives its
-    * replacement from that snapshot, and any merge that commits in
-    * between makes THIS commit fail loud (round-12 advice). A merge
-    * can never resurrect rows an erasure removed, because the two
-    * commits are totally ordered by the manifest version chain.
+    * (partitioned by `keys`) in one manifest commit — the one txn write
+    * and CAS behind every rewriting verb: merges ([[snapshot]]),
+    * erasure ([[Eraser]]), compaction and layout evolution. A touched
+    * partition absent from the replacement output is dropped from the
+    * manifest entirely (the fully-erased case — no directory deletion
+    * dance, the files just stop being referenced and [[vacuum]] reclaims
+    * them). Untouched entries are carried verbatim from `manifest`, the
+    * caller's snapshot at `expectedVersion`, and the commit creates
+    * exactly `m(expectedVersion + 1)` — the CAS spans the caller's entire
+    * snapshot-to-commit window, not just the write phase: a rewriting
+    * verb resolves the version once, reads/derives its replacement from
+    * that snapshot, and any commit in between makes THIS commit fail
+    * loud (round-12 advice). A merge can never resurrect rows an erasure
+    * removed, because the two commits are totally ordered by the
+    * manifest version chain.
     */
   private[lake] def replacePartitions(spark: SparkSession, path: String,
+                                      expectedVersion: Long, manifest: Map[String, String],
                                       touchedRels: Set[String], replacement: DataFrame,
                                       keys: Seq[String],
                                       writerOptions: Map[String, String] = Map.empty,
-                                      expectedVersion: Long,
                                       headers: Seq[(String, String)] = Nil): Unit = {
     val fs = fsFor(spark, path)
-    val manifest = readManifest(fs, path, expectedVersion)
     val txnName = newTxnDirName(expectedVersion)
     val txnDir = s"$path/data/$txnName"
     replacement.write.mode(SaveMode.Overwrite).options(writerOptions)
-      // committer v2: writer-private new dir, manifest-gated visibility
-      // (see mergeKeyed's txn write)
+      // committer v2 per-write (guide §6): this is a writer-private NEW
+      // directory whose visibility is gated by the manifest commit, so
+      // task-commit renames straight to the destination are safe and the
+      // v1 job-commit re-walk is pure overhead (session default stays v1
+      // for the lock path's dynamic overwrite, where v2 measured slower)
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .partitionBy(keys: _*).parquet(txnDir)
     beforeCommitHook()
+    // remap every touched partition to the new txn; new partitions are
+    // whatever the write actually produced under txnDir
     val written = leafPartitions(fs, new Path(txnDir), new Path(txnDir))
     val next = manifest -- touchedRels ++ written.map(_ -> txnName).toMap
     commitManifest(fs, path, expectedVersion, next, headers, base = Some(manifest))

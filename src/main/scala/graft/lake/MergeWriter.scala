@@ -3,6 +3,8 @@ package graft.lake
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Partitioned Parquet upsert sink — the reference's `save_to_parquet`
   * merge (crypto_collector.py:523–558) re-expressed for a distributed
@@ -104,21 +106,21 @@ object MergeWriter {
     new org.apache.hadoop.fs.Path(path, "_graft_schema.json")
 
   /** The lake's tracked logical schema, if the sidecar exists. */
-  def storedSchema(spark: SparkSession, path: String): Option[org.apache.spark.sql.types.StructType] = {
+  def storedSchema(spark: SparkSession, path: String): Option[StructType] = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     readStoredSchema(fs, path)
   }
 
   private[lake] def readStoredSchema(fs: org.apache.hadoop.fs.FileSystem,
-                                     path: String): Option[org.apache.spark.sql.types.StructType] = {
+                                     path: String): Option[StructType] = {
     val f = schemaSidecar(path)
     if (!fs.exists(f)) None
     else {
       val in = fs.open(f)
       val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
       Some(org.apache.spark.sql.types.DataType.fromJson(txt)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .asInstanceOf[StructType])
     }
   }
 
@@ -128,8 +130,8 @@ object MergeWriter {
     * only under the writer lock, so no other publisher can interleave.
     */
   private def publishStoredSchema(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                                  published: Option[org.apache.spark.sql.types.StructType],
-                                  schema: org.apache.spark.sql.types.StructType): Unit = {
+                                  published: Option[StructType],
+                                  schema: StructType): Unit = {
     val json = schema.json
     if (published.map(_.json).contains(json)) return
     val target = schemaSidecar(path)
@@ -173,26 +175,20 @@ object MergeWriter {
       // constant per dedup group — the clustered dedup's contract holds
       clusteredDedup = true)
 
-  /** The lock protocol's keyed merge — [[KeyedMerge]]'s shared body
-    * with this protocol's read and commit: a static-pruned affected-
-    * partition read, then a dynamic overwrite under the single-writer
-    * lock. Both dedup POLARITIES ride this one shape: the candle sink
-    * passes ascending `ingest_seq` (keep-LAST — a re-fetch is a
-    * correction) and the corpus sink passes its negation (FIRST-wins — a
-    * re-delivered document is interchangeable,
-    * [[graft.streaming.CorpusIngest.mergeDocs]]).
-    *
-    * The affected read lists only the touched partition directories
-    * that exist (`basePath` = the lake root, so partition columns still
-    * come from the paths): its driver-side listing grows with the batch,
-    * not the lake, and zero data files outside the touched partitions
-    * are opened. Past `spark.sql.sources.parallelPartitionDiscovery.
-    * threshold` (32) paths, Spark lists them in one Spark job. A
-    * broadcast left-semi join on the partition keys is no substitute:
-    * dynamic partition pruning does not reliably fire for it, and the
-    * merge then reads the ENTIRE lake per batch (ScaleRehearsalSpec's
-    * merge-read rehearsal). An empty batch leaves the lake as it was,
-    * and an absent lake absent.
+  /** Keyed merge into the lake at `path` — [[KeyedMerge]]'s body over
+    * the protocol the lake's layout names ([[Rewrite.open]]): a manifest
+    * lake (made by ManifestLake.create or importLockLake) must ALWAYS go
+    * through its protocol, since a dynamic-overwrite write into it would
+    * bypass commit visibility. Both dedup POLARITIES ride this one shape:
+    * the candle sink passes ascending `ingest_seq` (keep-LAST — a
+    * re-fetch is a correction) and the corpus sink passes its negation
+    * (FIRST-wins — a re-delivered document is interchangeable,
+    * [[graft.streaming.CorpusIngest.mergeDocs]]). `commitTag` (a
+    * streaming sink's batchId) is recorded in a manifest commit so a
+    * redelivered batch no-ops; the lock path ignores it — there,
+    * redelivery idempotence comes from the keyed dedup absorbing
+    * identical rows. An empty batch leaves the lake as it was, and an
+    * absent lake absent.
     *
     * Contract: `keys` columns in `tagged` are STRING-typed (both callers
     * derive them with date_format/lit), and `tagged` already carries the
@@ -202,66 +198,77 @@ object MergeWriter {
                                 keys: Seq[String], dedupKeys: Seq[org.apache.spark.sql.Column],
                                 order: Seq[org.apache.spark.sql.Column],
                                 commitTag: Option[String] = None,
-                                clusteredDedup: Boolean = false): DataFrame = {
-    // The protocol is the lake's own: a manifest lake (made by
-    // ManifestLake.create or importLockLake) self-describes by layout and
-    // must ALWAYS go through its protocol — a dynamic-overwrite write
-    // into it would bypass commit visibility. `commitTag` (a streaming
-    // sink's batchId) is recorded in the manifest commit so a
-    // redelivered batch no-ops; the lock path ignores it — there,
-    // redelivery idempotence comes from the keyed dedup absorbing
-    // identical rows.
-    if (ManifestLake.isManifestLake(spark, path))
-      return ManifestLake.mergeKeyed(spark, tagged, path, keys, dedupKeys, order,
-        commitTag, clusteredDedup = clusteredDedup)
+                                clusteredDedup: Boolean = false): DataFrame =
+    Rewrite.open(spark, path, keys)(
+      KeyedMerge(spark, _, tagged, dedupKeys, order, clusteredDedup, commitTag))
+
+  /** The lock protocol's [[Rewrite]], with the single-writer lock held
+    * across `body`'s whole read-derive-replace span.
+    */
+  private[lake] def locked[A](spark: SparkSession, path: String, keys: Seq[String])(
+      body: Rewrite => A): A = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    withWriterLock(fs, path)(body(new LockRewrite(spark, fs, path, keys)))
+  }
+
+  /** Read: the touched partition directories that exist, with `basePath`
+    * = the lake root so partition columns still come from the paths. Its
+    * driver-side listing grows with the touched set, not the lake, and
+    * zero data files outside the touched partitions are opened. Past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths,
+    * Spark lists them in one Spark job. A broadcast left-semi join on
+    * the partition keys is no substitute: dynamic partition pruning does
+    * not reliably fire for it, and the read then covers the ENTIRE lake
+    * (ScaleRehearsalSpec's merge-read rehearsal).
+    *
+    * Replace: a dynamic-partition overwrite, which replaces only the
+    * partitions the write produces, so a touched partition left with no
+    * row is removed explicitly. The tracked schema advances after the
+    * data write succeeded — a crash mid-write leaves the OLD sidecar,
+    * which still reads every surviving file correctly (by-name
+    * projection ignores extra columns in the partially-written files).
+    */
+  private final class LockRewrite(spark: SparkSession, fs: FileSystem, path: String,
+                                  val keys: Seq[String]) extends Rewrite {
+    private val root = new Path(path)
+    val schema: Option[StructType] = readStoredSchema(fs, path)
     // Scheme-aware existence check: java.io.File is silently false for
     // hdfs:///s3a:// paths, which would blind-overwrite a remote lake.
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLock(fs, path) {
-      val stored = readStoredSchema(fs, path)
-      val lakeExisted = fs.exists(hPath)
-      val m = KeyedMerge(spark, tagged, keys, dedupKeys, order, clusteredDedup,
-          stored, collectTouched = lakeExisted) { (schema, touched) =>
-        val dirs = touched.map { vs =>
-          new org.apache.hadoop.fs.Path(hPath, keys.zip(vs).map { case (k, v) =>
-            ExternalCatalogUtils.getPartitionPathString(k, v) }.mkString("/"))
-        }.filter(fs.exists)
-        if (dirs.isEmpty) None
-        else Some(spark.read.schema(schema).option("basePath", path)
-          .parquet(dirs.map(_.toString): _*)
-          // Materialize and cut lineage: Spark refuses to overwrite a
-          // path its own read plan references. Affected partitions are
-          // batch-sized, so executor-local checkpoint storage is bounded.
-          .localCheckpoint())
-      }
-      // An empty batch writes, commits and publishes nothing. On an
-      // existing lake the touched keys say so up front; on an absent
-      // lake the write itself is the only pass over the batch (a key
-      // pass there would decode a backfill's whole first batch twice),
-      // so a write that produced no partition directory removes the
-      // root it created.
-      if (!lakeExisted || m.touched.nonEmpty) {
-        // Per-write option, NOT session conf: a session-global mutation
-        // here would leak dynamic-overwrite semantics to every concurrent
-        // writer sharing the session.
-        m.toWrite.write
-          .mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(keys: _*)
-          .parquet(path)
-        if (!lakeExisted && !fs.listStatus(hPath).exists(_.isDirectory))
-          fs.delete(hPath, true)
-        else {
-          // advance the tracked schema only after the data write
-          // succeeded — a crash mid-write leaves the OLD sidecar, which
-          // still reads every surviving file correctly (by-name projection
-          // ignores extra columns in the partially-written files dynamic
-          // overwrite replaced)
-          publishStoredSchema(fs, path, stored, m.schema)
+    private val existed = fs.exists(root)
+    def collectsTouched: Boolean = existed
+    def redelivered(tag: String): Boolean = false
+
+    private def dir(values: Seq[String]) =
+      new Path(root, keys.zip(values).map { case (k, v) =>
+        ExternalCatalogUtils.getPartitionPathString(k, v) }.mkString("/"))
+
+    def read(touched: Seq[Seq[String]], schema: Option[StructType]): Option[DataFrame] = {
+      val dirs = touched.map(dir).filter(fs.exists)
+      if (dirs.isEmpty) None
+      else Some(Rewrite.scan(spark, path, dirs.map(_.toString), schema)
+        // Materialize and cut lineage: Spark refuses to overwrite a
+        // path its own read plan references. Affected partitions are
+        // batch-sized, so executor-local checkpoint storage is bounded.
+        .localCheckpoint())
+    }
+
+    def replace(rows: DataFrame, touched: Seq[Seq[String]], mayEmpty: Boolean,
+                schema: Option[StructType], headers: Seq[(String, String)]): Unit = {
+      // Per-write option, NOT session conf: a session-global mutation
+      // here would leak dynamic-overwrite semantics to every concurrent
+      // writer sharing the session.
+      rows.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+        .partitionBy(keys: _*).parquet(path)
+      if (!existed && !fs.listStatus(root).exists(_.isDirectory))
+        fs.delete(root, true)
+      else {
+        if (mayEmpty) {
+          val kept = rows.select(keys.map(col): _*).distinct().collect()
+            .map(r => keys.indices.map(r.getString): Seq[String]).toSet
+          touched.filterNot(kept).foreach(vs => fs.delete(dir(vs), true))
         }
+        schema.foreach(publishStoredSchema(fs, path, this.schema, _))
       }
-      m.deduped
     }
   }
 }

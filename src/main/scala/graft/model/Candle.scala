@@ -1,7 +1,6 @@
 package graft.model
 
 import java.sql.Timestamp
-import org.apache.spark.sql.types._
 
 /** Canonical OHLCV candle — the reference's single logical record shape,
   * produced identically by all five exchange parsers
@@ -20,21 +19,3 @@ case class Candle(
     volume: Double,
     symbol: String,
     exchange: String)
-
-object Candle {
-  /** StructType mirror of the case class (for raw DataFrame stages). */
-  val schema: StructType = StructType(Seq(
-    StructField("timestamp", TimestampType, nullable = false),
-    StructField("open", DoubleType, nullable = false),
-    StructField("high", DoubleType, nullable = false),
-    StructField("low", DoubleType, nullable = false),
-    StructField("close", DoubleType, nullable = false),
-    StructField("volume", DoubleType, nullable = false),
-    StructField("symbol", StringType, nullable = false),
-    StructField("exchange", StringType, nullable = false)))
-
-  /** Lake partition columns (crypto_collector.py:514–521 path scheme,
-    * expressed as true Hive partition levels — SURVEY.md §1.3).
-    */
-  val partitionCols: Seq[String] = Seq("symbol", "interval", "data_type", "exchange", "date")
-}

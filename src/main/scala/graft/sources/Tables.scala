@@ -43,14 +43,11 @@ object Tables {
     }
   }
 
-  /** Sessions must set `spark.sql.legacy.parquet.nanosAsLong=true`:
-    * `events.ts` is parquet TIMESTAMP(NANOS), which Spark 4 otherwise
-    * refuses to read (PARQUET_TYPE_ILLEGAL). [[Session.builder]] does.
-    */
-  val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
-
-  /** `events` with `ts` restored to TimestampType (µs). With nanosAsLong
-    * the nanos column arrives as LongType; `DIV 1000` is exact integer
+  /** `events` with `ts` restored to TimestampType (µs). `events.ts` is
+    * parquet TIMESTAMP(NANOS), which Spark 4 refuses to read
+    * (PARQUET_TYPE_ILLEGAL) unless the session sets
+    * `spark.sql.legacy.parquet.nanosAsLong` ([[graft.Session]] does);
+    * the nanos column then arrives as LongType; `DIV 1000` is exact integer
     * math (a double-division round trip would lose precision past 2^53).
     */
   def events(s: SparkSession, d: String): DataFrame = {

@@ -16,10 +16,10 @@ import graft.lake.MergeWriter
   *    to effectively-exactly-once in the lake
   *  - `last_collected_ts` state → checkpointed source offsets (T4)
   *  - wall-clock :00/:15 alignment (T1) — a genuine Spark gap:
-  *    ProcessingTime fires on its own clock. [[alignedDelayMs]] exposes
-  *    the boundary math for a driver-side scheduler that launches
-  *    `Trigger.AvailableNow` catch-up runs at computed boundaries, the
-  *    faithful equivalent (SURVEY.md §7 phase 4).
+  *    ProcessingTime fires on its own clock. [[runAligned]] is the
+  *    driver-side scheduler that launches `Trigger.AvailableNow`
+  *    catch-up runs at computed boundaries, the faithful equivalent
+  *    (SURVEY.md §7 phase 4).
   *
   * The source here is any streaming DataFrame of canonical candles —
   * tests drive it with MemoryStream; production would plug a DataSource
@@ -27,13 +27,6 @@ import graft.lake.MergeWriter
   * watermarks (T7 windows as input partitions).
   */
 object LiveIngest {
-
-  /** Milliseconds to sleep until the next aligned boundary — the
-    * reference's `ceil(now/period)*period − now` (crypto_collector.py:
-    * 664–667, 712–717).
-    */
-  def alignedDelayMs(nowMs: Long, periodMs: Long = 15 * 60 * 1000L): Long =
-    graft.normalize.Intervals.nextBoundaryMs(nowMs, periodMs) - nowMs
 
   /** Driver-side aligned scheduler (SURVEY.md §2.9 T1) — the reference's
     * `live_collection` loop (crypto_collector.py:659–717) made explicit:

@@ -164,4 +164,68 @@ class EraserSpec extends SparkSpec {
     val entries = ManifestLake.currentEntries(spark, dir)
     assert(entries.isEmpty, s"fully-erased bucket must leave the manifest: $entries")
   }
+
+  test("lock-path erasure of one bucket scans only that bucket's directory") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val lake = freshLake((1L to 400L).map(u => (u, s"p$u")), buckets = 16)
+    val bucket = spark.range(1).select(pmod(hash(lit(7L)), lit(16))).head().get(0).toString
+    val roots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation =>
+              h.location.rootPaths.foreach(p => roots.add(p.toUri.getPath))
+            case _ => ()
+          }
+          case _ => ()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Eraser.eraseKeys(spark, lake, "user_id", Seq(7L).toDF("user_id"), buckets = 16)
+        .collect()
+      Thread.sleep(1500) // drain the async listener bus
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val scanned = roots.asScala.toSet.filter(_.startsWith(lake))
+    assert(scanned == Set(s"$lake/bucket=$bucket"),
+      s"the erasure's read must list only bucket=$bucket: $scanned")
+    assert(spark.read.parquet(lake).count() == 399)
+  }
+
+  test("lock-path erasure of an evolved lake keeps the evolved column in rewritten buckets") {
+    import graft.lake.MergeWriter
+    val lake = java.nio.file.Files.createTempDirectory("graft_eraser_ev").toString + "/lake"
+    def merge(df: org.apache.spark.sql.DataFrame, seq: Long): Unit = {
+      MergeWriter.mergeKeyed(spark,
+        df.withColumn("bucket", pmod(hash($"user_id"), lit(4)).cast("string"))
+          .withColumn("ingest_seq", lit(seq)),
+        lake, Seq("bucket"), Seq(col("bucket"), col("user_id")), Seq(col("ingest_seq")))
+      ()
+    }
+    merge((1L to 40L).map(u => (u, s"p$u")).toDF("user_id", "payload"), 1L)
+    // one new user brings column `tier`, landing in one bucket only
+    merge(Seq((1000L, "n", "gold")).toDF("user_id", "payload", "tier"), 2L)
+    def bucketOf(u: Long): String =
+      spark.range(1).select(pmod(hash(lit(u)), lit(4))).head().get(0).toString
+    // erase a user whose bucket's files all predate the column
+    val victim = (1L to 40L).find(u => bucketOf(u) != bucketOf(1000L)).get
+    val b = bucketOf(victim)
+    val oldRows = spark.read.parquet(s"$lake/bucket=$b").count()
+    assert(!spark.read.parquet(s"$lake/bucket=$b").columns.contains("tier"))
+    Eraser.eraseKeys(spark, lake, "user_id", Seq(victim).toDF("user_id"), buckets = 4)
+    // the rewritten bucket's own files carry the column, null for the old rows
+    val rewritten = spark.read.parquet(s"$lake/bucket=$b")
+    assert(rewritten.columns.contains("tier"), rewritten.columns.mkString(","))
+    assert(rewritten.count() == oldRows - 1)
+    assert(rewritten.filter($"tier".isNotNull).count() == 0)
+    val out = MergeWriter.readLake(spark, lake)
+    assert(out.filter($"user_id" === victim).count() == 0)
+    assert(out.filter($"tier" === "gold").count() == 1)
+    assert(out.count() == 40)
+  }
 }
